@@ -136,10 +136,19 @@ object Bench {
     // 2 keeps total wall close to a single-pass run's envelope.
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "2").toInt
     val loadBefore = loadavg()
+    // a failed key keeps its first failure's `ExceptionClass: message`,
+    // on stderr and in the per-key artifact
+    val reasons = scala.collection.mutable.Map.empty[String, String]
     val passes = (1 to iters).map { _ =>
       prepared.map { case (name, mk) =>
         val t0 = System.nanoTime()
-        val ok = try { exec(mk()); true } catch { case _: Throwable => false }
+        val ok = try { exec(mk()); true } catch { case e: Throwable =>
+          if (!reasons.contains(name)) {
+            reasons(name) = e.toString
+            System.err.println(s"[bench] $name failed: $e")
+          }
+          false
+        }
         name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
     }
@@ -163,7 +172,7 @@ object Bench {
     // host-steal window (ratio ≫ 1) without consulting the narrative.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_PERKEY.json"),
-      perKeyJson(results, sfDir, loadBefore, loadAfter) + "\n")
+      perKeyJson(results, sfDir, loadBefore, loadAfter, reasons.toMap) + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] per-key artifact write failed: ${e.getMessage}")
     }
@@ -198,14 +207,20 @@ object Bench {
     } catch { case _: Throwable => -1.0 }
 
   /** The on-disk per-key artifact: full-precision seconds per key plus
-    * the same total/failed summary as the stdout total line, stamped
-    * with the run's own window identity (see the write site).
+    * the same total/failed summary as the stdout total line, each
+    * failed key's reason, stamped with the run's own window identity
+    * (see the write site).
     */
   def perKeyJson(results: Seq[(String, Double)], sfDir: String,
-                 loadBefore: Double = -1.0, loadAfter: Double = -1.0): String = {
+                 loadBefore: Double = -1.0, loadAfter: Double = -1.0,
+                 reasons: Map[String, String] = Map.empty): String = {
+    def quote(x: String): String = "\"" + new String(
+      com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(x)) + "\""
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
+    val why = results.collect { case (k, _) if reasons.contains(k) =>
+      quote(k) + ":" + quote(reasons(k)) }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val totalStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(total))
     val ratio = ratioVsQuietFloor(results)
@@ -213,6 +228,6 @@ object Bench {
     s"""{"metric":"queries_full","total":$totalStr,"n":${results.size},""" +
       s""""median_ratio_vs_quiet_floor":$ratioStr,""" +
       s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,""" +
-      s""""failed":${failed.mkString("[", ",", "]")},"sf":"$sfDir","queries":$qs}"""
+      s""""failed":${failed.mkString("[", ",", "]")},"reasons":$why,"sf":"$sfDir","queries":$qs}"""
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
@@ -15,7 +16,7 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * Usage: sbt "runMain graft.JobProbe" (all keys, sorted by wall) or
   * with key args. Config mirrors Bench exactly; one warmup pass, then
   * min-wall pass of SPARK_GRAFT_ITERS (default 2) with listener counts
-  * from the LAST pass (counts are plan-determined and stable).
+  * from that same pass.
   */
 object JobProbe {
   def main(args: Array[String]): Unit = {
@@ -65,19 +66,19 @@ object JobProbe {
       var bestWall = Double.MaxValue
       var (nj, ns, nt, tm, sw) = (0, 0, 0, 0L, 0L)
       (1 to iters).foreach { _ =>
-        // settle the async listener queue so counts attribute to this key
-        // (listenerBus is private[spark]; a short sleep is close enough
-        // for a dev instrument — counts are plan-determined and coarse)
-        Thread.sleep(120)
+        // drain the async listener queue so counts attribute to this key
+        GraftListenerBus.settle(spark.sparkContext)
         jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L); shufWr.set(0L)
         val t0 = System.nanoTime()
         try SparkEntry.queries(k)(spark, sfDir).count()
         catch { case _: Throwable => () }
         val wall = (System.nanoTime() - t0) / 1e6
-        Thread.sleep(120)
-        if (wall < bestWall) bestWall = wall
-        nj = jobs.get(); ns = stages.get(); nt = tasks.get(); tm = taskMs.get()
-        sw = shufWr.get()
+        GraftListenerBus.settle(spark.sparkContext)
+        if (wall < bestWall) {
+          bestWall = wall
+          nj = jobs.get(); ns = stages.get(); nt = tasks.get(); tm = taskMs.get()
+          sw = shufWr.get()
+        }
       }
       (k, bestWall, nj, ns, nt, tm, sw)
     }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.GraftListenerBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -341,11 +342,12 @@ object ScaleBench {
     def t(label: String)(f: => Long): (String, () => (Double, Long, Long, Long, Long)) =
       label -> { () =>
         f // warm
-        Thread.sleep(100) // settle the async listener queue
+        // drain the async listener queue so the counters hold this row only
+        GraftListenerBus.settle(spark.sparkContext)
         peakMem.set(0L); spilled.set(0L); shufWr.set(0L)
         val t0 = System.nanoTime(); val n = f
         val sec = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(100)
+        GraftListenerBus.settle(spark.sparkContext)
         (sec, n, peakMem.get(), spilled.get(), shufWr.get())
       }
 
@@ -369,24 +371,6 @@ object ScaleBench {
         case (k, None)    => spark.conf.unset(k)
       }
     }
-    /** Build (once) the snapshot-committed events fact: range-clustered
-      * by event_id into ~32 files with per-file envelopes, so a narrow
-      * id range resolves to a couple of files at the manifest.
-      */
-    def ensureSnapshotEvents(): String = {
-      val table = s"$out/events_snapshot"
-      if (sources.SnapshotTable.currentVersion(spark, table) == 0L) {
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", "40000")
-        try sources.SnapshotTable.commit(spark, table,
-          events.select(col("event_id"), col("value"))
-            .repartitionByRange(16, col("event_id"))
-            .sortWithinPartitions("event_id"),
-          statsCols = Seq("event_id"))
-        finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-      }
-      table
-    }
-
     /** The bloom A/B join: full replicated lineitem against a ~3%
       * orders slice, forced merge join — the selective side's keys
       * prune the fact scan when the runtime filter is on.
@@ -478,140 +462,6 @@ object ScaleBench {
       }.sum
       math.round(hits.toDouble / (probes.length * 10) * 1000)
     }
-
-    /** Build (once) a 1M-row, 32-"day" snapshot table for the merge
-      * A/B rows: ~4 files per day so the scoped twin has files to skip.
-      * Only the scoped table commits day envelopes — the whole-rewrite
-      * twin deliberately has none (its merges would drop them anyway).
-      */
-    // ~128 incompressible bytes per row — a short-payload table prices
-    // job launches, not the rewrite I/O the scoped lever exists to cut
-    def mergePayload(seed: String) = concat(
-      sha2(concat(lit(seed), col("id").cast("string")), 256),
-      sha2(concat(col("id").cast("string"), lit(seed)), 256))
-    // table scales with `copies` like the replicated corpora: 1M rows
-    // at the default 10×, 10M at 100× — the scoped win WIDENS with
-    // scale (the whole rewrite grows linearly, the touched day + commit
-    // machinery stays ~constant)
-    val mergeRows = 100000L * copies
-    val mergePerDay = mergeRows / 32L
-    def ensureMergeBase(table: String, scoped: Boolean): String = {
-      if (sources.SnapshotTable.currentVersion(spark, table) == 0L) {
-        spark.conf.set("spark.sql.files.maxRecordsPerFile", "8192")
-        try sources.SnapshotTable.commit(spark, table,
-          spark.range(mergeRows).select(
-            col("id").as("k"),
-            (col("id") / mergePerDay).cast("long").as("day"),
-            mergePayload("base").as("v")),
-          statsCols = if (scoped) Seq("day") else Nil)
-        finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-      }
-      table
-    }
-    /** The scoped-CDC A/B lifecycle: seed the FULL key space
-      * (10k × copies keys, ~64 incompressible bytes each, 32
-      * key-derived scope regions — scope = k DIV perRegion, key-stable
-      * by construction), then 9 update batches each touching a ROLLING
-      * 2-of-32-region window (the realistic shape: changes hit recent
-      * days). The scoped sink rewrites ~1/16 of the files per batch;
-      * the whole-rewrite control re-lands the entire table. Same change
-      * stream, same per-batch vacuum. The per-batch fixed machinery of
-      * the scoped path (scope collect, manifest partition, stats
-      * aggregate) is ~constant while the control grows with the TABLE,
-      * so the A/B crosses over as copies grow — measured: the scoped
-      * path LOSES at 10× (machinery > a 10 MB rewrite) and wins at
-      * 100×; at 100 TB the control shape is simply not runnable.
-      * Returns the final row count.
-      */
-    def cdcScopedLifecycle(table: String, scoped: Boolean): Long = {
-      val keySpace = 10000L * copies
-      val regions = 32L
-      val perRegion = keySpace / regions
-      rmTree(table)
-      (0 until 10).foreach { b =>
-        val chg =
-          if (b == 0)
-            spark.range(keySpace).select(
-              col("id").as("k"),
-              (col("id") / perRegion).cast("long").as("scope"),
-              sha2(concat(lit("s"), col("id").cast("string")), 256).as("payload"),
-              col("id").as("version"),
-              lit(false).as("deleted"))
-          else {
-            val lo = ((b - 1) % (regions - 1)) * perRegion
-            spark.range(b * keySpace, b * keySpace + 2L * perRegion).select(
-              (lit(lo) + pmod(col("id"), lit(2L * perRegion))).as("k"),
-              ((lit(lo) + pmod(col("id"), lit(2L * perRegion))) / perRegion)
-                .cast("long").as("scope"),
-              sha2(concat(lit("p"), col("id").cast("string")), 256).as("payload"),
-              col("id").as("version"),
-              (pmod(col("id"), lit(5)) === 0).as("deleted"))
-          }
-        if (scoped)
-          graft.streaming.MergeStream.applyBatchSnapshotScoped(
-            spark, table, chg, Seq("k"), "version", "scope")
-        else
-          graft.streaming.MergeStream.applyBatchSnapshot(
-            spark, table, chg, Seq("k"), "version")
-        graft.sources.SnapshotTable.vacuum(spark, table, retain = 1)
-      }
-      graft.sources.SnapshotTable.read(spark, table).count()
-    }
-
-    /** Build (once) a snapshot table carrying a LARGE outstanding
-      * equality-delete backlog — 10% of keys across ten deleteWhere
-      * commits, the deferred-compaction state the broadcast guard
-      * exists for. Read-only from the priced rows, so one seed serves
-      * warm and timed passes.
-      */
-    def ensureDeleteBacklog(): String = {
-      val table = s"$out/delete_backlog"
-      if (sources.SnapshotTable.currentVersion(spark, table) == 0L) {
-        sources.SnapshotTable.commit(spark, table,
-          spark.range(mergeRows).select(
-            col("id").as("k"), mergePayload("base").as("v")))
-        (0 until 10).foreach { i =>
-          sources.SnapshotTable.deleteWhere(spark, table,
-            spark.range(mergeRows / 100L)
-              .select((col("id") * 100L + i).as("k")))
-        }
-      }
-      table
-    }
-
-    /** Build (once) a 100-version table: 100 appends of 10k rows each
-      * (1M total), day-stamped with envelopes, plus one deleteRange
-      * retention sweep mid-history — the long-lived streaming-source
-      * shape whose CDF bootstrap cost the row above prices.
-      */
-    def ensureVersionHistory(): String = {
-      val table = s"$out/version_history"
-      if (sources.SnapshotTable.currentVersion(spark, table) == 0L) {
-        (0 until 100).foreach { v =>
-          sources.SnapshotTable.append(spark, table,
-            spark.range(v * 10000L, (v + 1) * 10000L).select(
-              col("id").as("k"), lit(v.toLong).as("day"),
-              mergePayload("b").as("v")).coalesce(1),
-            statsCols = Seq("day"))
-          // retention sweep at mid-history: drops the first 10 days
-          // whole-file, emits ONE range-retraction event in the feed
-          if (v == 50) sources.SnapshotTable.deleteRange(
-            spark, table, "day", 0L, 9L)
-        }
-      }
-      table
-    }
-
-    // warm/timed twin selector for the range-delete row
-    var drInvocation = 0
-
-    /** The 1-of-32-days change set both merge rows apply. */
-    def mergeDayChanges(): DataFrame =
-      spark.range(7L * mergePerDay, 8L * mergePerDay)
-        .select(
-          col("id").as("k"),
-          lit(7L).as("day"),
-          mergePayload("upd").as("v"))
 
     val ops = Seq(
       t("agg_q1_6m") {
@@ -912,176 +762,6 @@ object ScaleBench {
       // this pair prices it on the identical no-broadcast merge join.
       t("bloom_smj_on_6m") { withBloom(true) { bloomStar().count() } },
       t("bloom_smj_off_6m") { withBloom(false) { bloomStar().count() } },
-      // MANIFEST-level file skipping (r10 SnapshotTable): the events
-      // fact committed ONCE range-clustered by event_id with per-file
-      // envelopes; the pruned read resolves a narrow id range from the
-      // manifest alone vs the same filter over the full snapshot. The
-      // fourth storage lever, at LISTING resolution (before footers).
-      t("snapshot_prune_read_1m") {
-        val table = ensureSnapshotEvents()
-        sources.SnapshotTable.readPruned(spark, table, "event_id", 10000L, 19999L)
-          .agg(count(lit(1)), sum("value")).collect()(0).getLong(0)
-      },
-      t("snapshot_unpruned_read_1m") {
-        val table = ensureSnapshotEvents()
-        sources.SnapshotTable.read(spark, table)
-          .filter(col("event_id").between(10000L, 19999L))
-          .agg(count(lit(1)), sum("value")).collect()(0).getLong(0)
-      },
-      // FILE-SCOPED MERGE priced A/B (r10 verdict missing #3): 1M rows
-      // in 32 "days" (~4 files/day, day envelopes committed), a change
-      // set touching ONE day. The whole-rewrite merge reads + rewrites
-      // all 1M rows per commit; mergeScoped resolves the touched files
-      // from the manifest, rewrites only that day, and carries the
-      // other ~124 manifest lines forward verbatim — the Iceberg-style
-      // posture where a 1-of-N-partition change set costs 1/N of the
-      // table, structural at object-store scale. Separate tables: a
-      // whole merge drops the day envelopes its scoped twin needs.
-      t("snapshot_merge_whole_1m") {
-        val table = ensureMergeBase(s"$out/merge_whole", scoped = false)
-        sources.SnapshotTable.merge(spark, table, mergeDayChanges(), Seq("k"))
-        sources.SnapshotTable.vacuum(spark, table, retain = 1)
-      },
-      t("snapshot_merge_scoped_1m") {
-        val table = ensureMergeBase(s"$out/merge_scoped", scoped = true)
-        sources.SnapshotTable.mergeScoped(spark, table, mergeDayChanges(),
-          Seq("k"), scopeCol = "day")
-        sources.SnapshotTable.vacuum(spark, table, retain = 1)
-      },
-      // ROW-LEVEL DELETE priced A/B (r11 verdict missing #2): a
-      // 0.1%-SCATTERED victim set (every 1000th key → present in every
-      // one of the 32 day-scopes). Copy-on-write (mergeScoped with a
-      // delete flag) must rewrite EVERY scope's files — scattered
-      // deletes are its worst case, and the rewrite grows with the
-      // table. Merge-on-read (deleteWhere) commits one tiny equality-
-      // delete key file and defers the subtraction to read time — so
-      // BOTH rows include a full delete-aware read+count: the honest
-      // comparison charges MoR its read-side anti-join. At 100 TB the
-      // CoW shape rewrites the table to remove 0.1% of it; MoR writes
-      // kilobytes and lets the next scheduled compaction fold the
-      // purge into maintenance it was doing anyway.
-      t("snapshot_delete_mor_1m") {
-        val table = ensureMergeBase(s"$out/delete_mor", scoped = true)
-        val victims = spark.range(mergeRows / 1000L)
-          .select((col("id") * 1000L).as("k"))
-        sources.SnapshotTable.deleteWhere(spark, table, victims)
-        val n = sources.SnapshotTable.read(spark, table).count()
-        sources.SnapshotTable.vacuum(spark, table, retain = 1)
-        n
-      },
-      // RANGE DELETE priced (r12): drop 8 CONTIGUOUS days of 32 from a
-      // day-clustered table — the retention shape. Every affected
-      // file's envelope is entirely inside the range, so the commit is
-      // ONE manifest write and zero data jobs: the time should be FLAT
-      // in table size (compare the MoR/CoW pair above, both of which
-      // scale). Two pre-seeded twin tables so the warm and timed
-      // passes each delete from a fresh one; returns the surviving
-      // file count (driver-resolved — the op has no deferred read
-      // cost to charge).
-      t("snapshot_delete_range_1m") {
-        if (drInvocation == 0) (1 to 2).foreach { i =>
-          // both twins built (or rebuilt, when a prior run consumed
-          // them) on the FIRST call only — the warm pass absorbs the
-          // seeding, the timed pass is the pure delete
-          val tbl = s"$out/delete_range_$i"
-          if (sources.SnapshotTable.currentVersion(spark, tbl) != 1L) {
-            rmTree(tbl)
-            spark.conf.set("spark.sql.files.maxRecordsPerFile", "8192")
-            try sources.SnapshotTable.commit(spark, tbl,
-              spark.range(mergeRows).select(
-                col("id").as("k"),
-                (col("id") / mergePerDay).cast("long").as("day"),
-                mergePayload("base").as("v")),
-              statsCols = Seq("day"))
-            finally spark.conf.unset("spark.sql.files.maxRecordsPerFile")
-          }
-        }
-        drInvocation += 1
-        val tbl = s"$out/delete_range_${math.min(drInvocation, 2)}"
-        sources.SnapshotTable.deleteRange(spark, tbl, "day", 0L, 7L)
-        sources.SnapshotTable.snapshotFiles(spark, tbl).size.toLong
-      },
-      t("snapshot_delete_cow_1m") {
-        val table = ensureMergeBase(s"$out/delete_cow", scoped = true)
-        val changes = spark.range(mergeRows / 1000L).select(
-          (col("id") * 1000L).as("k"),
-          ((col("id") * 1000L) / mergePerDay).cast("long").as("day"),
-          mergePayload("del").as("v"),
-          lit(true).as("del"))
-        sources.SnapshotTable.mergeScoped(spark, table, changes,
-          Seq("k"), scopeCol = "day", deleteCol = Some("del"))
-        val n = sources.SnapshotTable.read(spark, table).count()
-        sources.SnapshotTable.vacuum(spark, table, retain = 1)
-        n
-      },
-      // MERGE-ON-READ under a HEAVY backlog, both anti-join modes
-      // (r12 verdict what's-wrong #2): 10% of keys outstanding across
-      // 10 delete files. The broadcast mode ships the key union to
-      // every task; past deleteBroadcastMaxRows the guard drops the
-      // hint and the anti-join shuffles — slower here, but bounded in
-      // executor memory however far compaction is deferred. The pair
-      // prices the crossover the guard's default encodes.
-      t("snapshot_mor_read_bcast_1m") {
-        sources.SnapshotTable.read(spark, ensureDeleteBacklog()).count()
-      },
-      t("snapshot_mor_read_shuffle_1m") {
-        val prev = sources.SnapshotTable.deleteBroadcastMaxRows
-        sources.SnapshotTable.deleteBroadcastMaxRows = 1L
-        try sources.SnapshotTable.read(spark, ensureDeleteBacklog()).count()
-        finally sources.SnapshotTable.deleteBroadcastMaxRows = prev
-      },
-      // the SQL DOOR's envelope skip (r13 verdict missing #1, priced):
-      // the same narrow id range through format("graft-snapshot") — the
-      // pushed filter prunes the committed file list against manifest
-      // envelopes BEFORE parquet plans a single footer read, so this
-      // row should track snapshot_prune_read_1m (the Scala door's
-      // readPruned), not snapshot_unpruned_read_1m
-      t("snapshot_sql_prune_read_1m") {
-        spark.read.format("graft-snapshot").load(ensureSnapshotEvents())
-          .filter(col("event_id").between(10000L, 19999L))
-          .agg(count(lit(1)), sum("value")).collect()(0).getLong(0)
-      },
-      // CDF BOOTSTRAP over a LONG history (r14 verdict missing #5,
-      // priced): 100 append versions + a mid-history deleteRange, all
-      // replayed from version 1 with a fresh checkpoint — the planning
-      // cost of one-ParquetTable-per-(version × change-type) slice is
-      // the dominated term this row puts on the record (cross-stamp
-      // slice coalescing is impossible: the commit-version stamp is a
-      // per-slice literal, and a merged scan cannot stamp per file).
-      // The deleteRange rides the r15 range-retraction event — ONE
-      // event row, not a feed death. Returns events delivered
-      // (100 × 10k inserts + 1 range retraction).
-      t("snapshot_cdf_bootstrap_100v") {
-        val table = ensureVersionHistory()
-        var n = 0L
-        val q = spark.readStream.format("graft-snapshot")
-          .option("readChangeFeed", "true").load(table)
-          .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("cdf-bootstrap").toString)
-          .foreachBatch { (df: DataFrame, _: Long) => n += df.count(); () }
-          .start()
-        q.processAllAvailable(); q.stop()
-        n
-      },
-      // CHANGE FEED under the delete-heavy backlog (r14): replay the
-      // 1M-row table + its ten equality-delete files as
-      // inserts+retractions through readChangeFeed — the price of
-      // MAINTAINING a downstream materialization instead of
-      // recomputing it; returns events delivered (1M + 10×10k keys)
-      t("snapshot_cdf_feed_1m") {
-        val table = ensureDeleteBacklog()
-        var n = 0L
-        val q = spark.readStream.format("graft-snapshot")
-          .option("readChangeFeed", "true").load(table)
-          .writeStream
-          .option("checkpointLocation", java.nio.file.Files
-            .createTempDirectory("cdf-bench").toString)
-          .foreachBatch { (df: DataFrame, _: Long) => n += df.count(); () }
-          .start()
-        q.processAllAvailable(); q.stop()
-        n
-      },
       t("prune_static_3day_1m") {
         sources.Layout.readPartitioned(spark, ensureEventsByDate())
           .filter(col("p_date").between("2024-01-10", "2024-01-12"))
@@ -1696,64 +1376,6 @@ object ScaleBench {
             spark, path, chg, Seq("k"), "version")
         }
         spark.read.parquet(path).count()
-      },
-      // the same CDC lifecycle landing through SnapshotTable commits
-      // (r10): each batch = ONE atomic version — prices what the
-      // no-vanish-window guarantee costs vs the directory-swap row
-      // above (expected ≈ the manifest+HEAD writes, i.e. ~nothing; the
-      // rewrite dominates both). Scratch table per run so version
-      // history starts clean.
-      t("stream_cdc_upsert_snapshot_1m_changes") {
-        val keySpace = 100000L
-        val n = 1000000L
-        val batches = 10
-        val table = s"$out/cdc_snap_target"
-        rmTree(table)
-        (0 until batches).foreach { b =>
-          val chg = spark.range(b * n / batches, (b + 1) * n / batches)
-            .select(
-              pmod(col("id"), lit(keySpace)).as("k"),
-              concat(lit("p"), col("id")).as("payload"),
-              col("id").as("version"),
-              (pmod(col("id"), lit(5)) === 0).as("deleted"))
-          graft.streaming.MergeStream.applyBatchSnapshot(
-            spark, table, chg, Seq("k"), "version")
-          // retain only the current version as a real maintainer would
-          // (unbounded history would price DISK, not the commit path)
-          graft.sources.SnapshotTable.vacuum(spark, table, retain = 1)
-        }
-        graft.sources.SnapshotTable.read(spark, table).count()
-      },
-      // the CDC lifecycle through the FILE-SCOPED merge (r11): batches
-      // with scope LOCALITY (each touches 2 of 32 key-derived scope
-      // regions — the realistic shape: changes hit recent days), landed
-      // via applyBatchSnapshotScoped vs the whole-rewrite control on
-      // the IDENTICAL change stream. Payload is ~64 incompressible
-      // bytes so the rewrite, not job launches, is what's priced.
-      // the FAST-APPEND ingest path (r11 manifest-list layer): 10
-      // batches of 100k ~64 B rows land as one leaf + one include line
-      // each — per-append cost must stay FLAT as the table grows
-      // (nothing is read or rewritten), vs the CDC rows above whose
-      // whole-rewrite grows with the table. Day envelopes recorded so
-      // the appended table stays scope-prunable.
-      t("snapshot_append_ingest_1m") {
-        val table = s"$out/append_ingest"
-        rmTree(table)
-        (0 until 10).foreach { b =>
-          graft.sources.SnapshotTable.append(spark, table,
-            spark.range(b * 100000L, (b + 1) * 100000L).select(
-              col("id").as("k"),
-              (col("id") / 31250L).cast("long").as("day"),
-              sha2(concat(lit("a"), col("id").cast("string")), 256).as("payload")),
-            statsCols = Seq("day"))
-        }
-        graft.sources.SnapshotTable.read(spark, table).count()
-      },
-      t("stream_cdc_scoped_100k_keys") {
-        cdcScopedLifecycle(s"$out/cdc_scoped_target", scoped = true)
-      },
-      t("stream_cdc_scoped_whole_100k_keys") {
-        cdcScopedLifecycle(s"$out/cdc_scoped_whole_target", scoped = false)
       },
       // TTL'd LSH-index lifecycle under churn (round-9): the dup-ingest
       // corpus re-cut into sequenced cohorts; with the 600 s TTL the

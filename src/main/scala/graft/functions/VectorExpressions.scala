@@ -223,9 +223,6 @@ class GraftExactExtensions extends (org.apache.spark.sql.SparkSessionExtensions 
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftFunctions.all.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
-    // snapshot-table MoR fallback past the DSv2 ceiling — bit-exact
-    // (only ever replaces a relation that would otherwise REFUSE)
-    new graft.sources.GraftSnapshotExtensions().apply(ext)
   }
 }
 

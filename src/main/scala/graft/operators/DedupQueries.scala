@@ -149,8 +149,9 @@ object DedupQueries extends QueryPack {
     * J ≥ t ⟹ |A∩B| ≥ t·max(|A|,|B|)), so the candidate join's fan-out
     * is bounded by RARE-gram occupancy instead (measured 22× smaller:
     * 45k on the slice, 49.8M unbounded). Candidates then confirm
-    * exactly via array_intersect on the full gram sets — arithmetic
-    * identical to the old per-pair count, so rows are bit-identical.
+    * exactly by counting their shared grams (equi-joins on the full
+    * gram sets plus one hash aggregate) — arithmetic identical to the
+    * old per-pair count, so rows are bit-identical.
     * Correctness needs only a CONSISTENT total gram order; (df, gram)
     * rarity order is what makes the prefix fan-out small, not what
     * makes it exact.
@@ -195,9 +196,10 @@ object DedupQueries extends QueryPack {
     *   3. candidate join on PREFIX grams only, with the exact size
     *      filter 4·max(|A|,|B|) ≤ 5·min (J ≥ 0.8 ⟹ |A∩B| ≥ (4/9)(a+b)
     *      and |A∩B| ≤ min ⟹ 5·min ≥ 4·max);
-    *   4. exact confirm: array_intersect over the full gram sets of
-    *      candidate ids only — the LSH-candidate/confirm split of
-    *      dedup_minhash_lsh.
+    *   4. exact confirm: count each candidate's shared grams — its
+    *      a-side grams equi-joined to the b-side on (b_id, gram), one
+    *      hash aggregate — over candidate ids only, the LSH-candidate/
+    *      confirm split of dedup_minhash_lsh.
     * The SHUFFLE_HASH hint on the self-join makes both sides exchange
     * on the identical hash(gram) subtree so ReuseExchange runs the
     * prefix construction once (the minhash discipline).

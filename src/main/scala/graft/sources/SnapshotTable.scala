@@ -607,38 +607,12 @@ object SnapshotTable {
     }.toMap
   }
 
-  /** A single consumer's current pin, by identity (the streaming
-    * source re-reads its OWN pin at restart to seed its idle-refresh
-    * floor — the one value guaranteed at or below its replay floor).
-    */
-  def pinOf(spark: SparkSession, table: String,
-            consumerId: String): Option[Long] =
-    readPin(fs(spark, table), hp(table, MetaDir, pinName(consumerId)))
-
   /** Drop a consumer's pin (a decommissioned consumer releasing its
     * hold explicitly instead of waiting out `pinMaxAgeMs`). True when
     * a pin was actually removed.
     */
   def unpin(spark: SparkSession, table: String, consumerId: String): Boolean =
     fs(spark, table).delete(hp(table, MetaDir, pinName(consumerId)), false)
-
-  /** Drop a pin by its FILE NAME — the [[pinnedVersions]] key, which
-    * is hashed and NOT invertible to the consumer id. This is how the
-    * SQL `CALL pins` / `CALL unpin` pair composes: list, then release
-    * what the listing named. The name must be a bare file name: a
-    * path separator would escape the pin namespace (reachable from
-    * SQL — a crafted `pin-x/../manifest-00003` would delete a
-    * committed manifest through the one surface documented as never
-    * destroying data), so it refuses loudly.
-    */
-  def unpinByName(spark: SparkSession, table: String,
-                  pinFile: String): Boolean = {
-    require(pinFile.startsWith(PinPrefix) && !pinFile.contains("/") &&
-      !pinFile.contains("\\"),
-      s"not a bare pin file name (expected $PinPrefix*, no separators): " +
-        pinFile)
-    fs(spark, table).delete(hp(table, MetaDir, pinFile), false)
-  }
 
   /** The sink-commit ledger of snapshot `version`: for each streaming
     * sink identity, the highest micro-batch id whose append COMMITTED —
@@ -721,37 +695,6 @@ object SnapshotTable {
       .collect { case dl: DeleteLine => dl.path -> dl.cols }
   }
 
-  /** A delete file's resolved description for the DSv2 merge-on-read
-    * scan: key file path, key columns, certified key-row count, and
-    * the sequence number it applies below.
-    */
-  private[sources] case class DeleteFileInfo(path: String, cols: Seq[String],
-                                             rows: Long, appliesBelow: Long)
-
-  private[sources] def deleteFileInfos(spark: SparkSession, table: String,
-                                       version: Long): Seq[DeleteFileInfo] = {
-    val v = resolve(spark, table, version)
-    topLines(fs(spark, table), table, v).collect { case dl: DeleteLine =>
-      DeleteFileInfo(dl.path, dl.cols, deleteRows(spark, table, dl),
-        dl.appliesBelow)
-    }
-  }
-
-  /** The sequence number of a manifest-relative file path (its
-    * `data-N/` prefix) — see [[dataVersionOf]].
-    */
-  private[sources] def dataVersionOfFile(rel: String): Long =
-    dataVersionOf(rel)
-
-  /** EXISTING manifest versions, ascending — version-number gaps from
-    * crashed claims simply don't appear. The change-data-feed iterates
-    * these to classify and diff each commit in a range.
-    */
-  private[sources] def versionsOf(spark: SparkSession,
-                                  table: String): Seq[Long] =
-    metaNames(fs(spark, table), table)
-      .collect { case ManifestRe(n) => n.toLong }.sorted
-
   /** Above this many OUTSTANDING delete-key rows (summed over a
     * snapshot's delete files per key-column set), [[applyDeletes]]
     * drops its broadcast hint and lets the anti-join shuffle: a
@@ -761,14 +704,6 @@ object SnapshotTable {
     * dozen bytes); compaction purges the backlog either way.
     */
   @volatile var deleteBroadcastMaxRows: Long = 4L * 1000 * 1000
-
-  /** Ceiling for the DSv2 doors' merge-on-read key sets (boxed
-    * per-key driver/task representation — an order of magnitude
-    * heavier per row than the compact broadcast relation
-    * [[applyDeletes]] builds, hence the lower default). The effective
-    * DSv2 bound is the MIN of this and [[deleteBroadcastMaxRows]].
-    */
-  @volatile var deleteSpecMaxRows: Long = 1L * 1000 * 1000
 
   /** A delete file's key-row count: the manifest-certified `__rows`
     * token when present, else one driver-side footer read (lines
@@ -1473,12 +1408,9 @@ object SnapshotTable {
       }
     }
 
-  /** The stat columns a SQL write carries FORWARD: the table's
+  /** The stat columns a rewrite carries FORWARD: the table's
     * committed stat columns, restricted to the ones the outgoing
-    * frame still has with a long-castable type (an OVERWRITE/RTAS may
-    * change the schema). ONE definition for every SQL door — INSERT,
-    * MERGE, UPDATE, CTAS-replace — so the carry rule cannot silently
-    * diverge between them.
+    * frame still has with a long-castable type.
     */
   private[sources] def carriedStatsCols(spark: SparkSession, table: String,
       outSchema: org.apache.spark.sql.types.StructType): Seq[String] =
@@ -1486,51 +1418,6 @@ object SnapshotTable {
       outSchema.fields.exists(f => f.name.equalsIgnoreCase(c) &&
         org.apache.spark.sql.catalyst.expressions.Cast
           .canCast(f.dataType, org.apache.spark.sql.types.LongType))
-    }
-
-  /** SQL `MERGE INTO`'s commit half ([[GraftMergeCommand]]): read the
-    * current snapshot, build the merged frame under full SQL clause
-    * semantics ([[GraftSqlMergeExec.mergedFrame]]), and replace-commit
-    * against the version read — retried wholesale on a rival commit,
-    * with the table's stat columns carried forward like every SQL
-    * write.
-    */
-  private[sources] def mergeSql(spark: SparkSession, table: String,
-      targetOutput: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-      source: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      mergeCondition: org.apache.spark.sql.catalyst.expressions.Expression,
-      matchedActions: Seq[org.apache.spark.sql.catalyst.plans.logical.MergeAction],
-      notMatchedActions: Seq[org.apache.spark.sql.catalyst.plans.logical.MergeAction],
-      notMatchedBySourceActions: Seq[org.apache.spark.sql.catalyst.plans.logical.MergeAction])
-      : Long =
-    retryingCommit(spark, table) { base =>
-      val target = read(spark, table, base)
-      val sourceDf = org.apache.spark.sql.GraftColumnShim.ofRows(spark, source)
-      val out = GraftSqlMergeExec.mergedFrame(table, target, sourceDf,
-        targetOutput, source.output, mergeCondition, matchedActions,
-        notMatchedActions, notMatchedBySourceActions)
-      commit(spark, table, out,
-        statsCols = carriedStatsCols(spark, table, out.schema),
-        expectedBase = Some(base), op = "merge")
-    }
-
-  /** SQL `UPDATE`'s commit half ([[GraftUpdateCommand]]): the target
-    * read projected through the assignments where the condition holds
-    * ([[GraftSqlMergeExec.updatedFrame]]), replace-committed against
-    * the version read with stat columns carried forward — the same
-    * retry/carry discipline as every SQL write.
-    */
-  private[sources] def updateSql(spark: SparkSession, table: String,
-      targetOutput: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-      assignments: Seq[org.apache.spark.sql.catalyst.plans.logical.Assignment],
-      condition: Option[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Long =
-    retryingCommit(spark, table) { base =>
-      val out = GraftSqlMergeExec.updatedFrame(read(spark, table, base),
-        targetOutput, assignments, condition)
-      commit(spark, table, out,
-        statsCols = carriedStatsCols(spark, table, out.schema),
-        expectedBase = Some(base), op = "update")
     }
 
   /** FILE-SCOPED MERGE — the manifest-sharing scale path (the Iceberg

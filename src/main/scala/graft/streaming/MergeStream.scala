@@ -45,11 +45,6 @@ import graft.sources.Layout
   */
 object MergeStream {
 
-  /** One micro-batch of the lifecycle: collapse the batch to its
-    * max-version change per key, version-conditionally MERGE into the
-    * parquet table at `path` (created on first batch), swap. Exposed for
-    * direct certification; [[upsertSink]] wires it to foreachBatch.
-    */
   /** Deterministic intra-batch collapse: max version per key, full-row
     * struct comparison on ties (a replayed duplicate ties with itself).
     */
@@ -64,6 +59,11 @@ object MergeStream {
       .filter(col(rn) === 1).drop(rn)
   }
 
+  /** One micro-batch of the lifecycle: collapse the batch to its
+    * max-version change per key, version-conditionally MERGE into the
+    * parquet table at `path` (created on first batch), swap. Exposed for
+    * direct certification; [[upsertSink]] wires it to foreachBatch.
+    */
   def applyBatch(spark: SparkSession, path: String, batch: DataFrame,
                  keys: Seq[String], versionCol: String): Unit = {
     if (batch.isEmpty) return

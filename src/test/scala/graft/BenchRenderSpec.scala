@@ -25,9 +25,13 @@ class BenchRenderSpec extends AnyFunSuite {
 
   test("per-key artifact keeps full precision and the summary fields") {
     val results = Seq("q_ok" -> 1.256823555, "q_broken" -> -1.0)
-    val json = Bench.perKeyJson(results, "/sf")
+    val reason = new IllegalStateException("no column \"x\"\nin plan").toString
+    val json = Bench.perKeyJson(results, "/sf", reasons = Map("q_broken" -> reason))
     assert(json.contains("\"q_ok\":1.256823555"))
     assert(json.contains("\"failed\":[\"q_broken\"]"))
+    // the reason is the exception class and message, JSON-escaped
+    assert(json.contains("\"reasons\":{\"q_broken\":" +
+      "\"java.lang.IllegalStateException: no column \\\"x\\\"\\nin plan\"}"), json)
     assert(json.contains("\"total\":1.257"))
     assert(json.contains("\"n\":2"))
   }
