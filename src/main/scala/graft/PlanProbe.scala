@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.shuffle.partitions", "8")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()

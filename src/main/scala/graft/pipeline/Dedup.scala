@@ -282,12 +282,9 @@ object Dedup {
     * test costs ONE edge-wide join instead of two, the per-round test
     * is free modulo the post-shuffle join recompute in B, and a
     * fixpoint seed (all-clique verbatim-copy graphs) is detected before
-    * any propagation work — what the old opt-in `probeSeed` flag
-    * bought, now always on at no cost to chained graphs.
+    * any propagation work, at no cost to chained graphs.
     *
     * @param pairs undirected edges (aCol, bCol)
-    * @param probeSeed retained for API stability; the seed probe is now
-    *   always on (see above) and this flag is a no-op.
     * @param dedupEdges distinct the directed edge list before iterating.
     *   Duplicate edges never change the fixpoint (keyed `min` is
     *   idempotent) but inflate every round's join, so dedup is the
@@ -298,7 +295,6 @@ object Dedup {
     */
   def clusters(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
                maxIter: Int = 50, dedupEdges: Boolean = true,
-               probeSeed: Boolean = false,
                prePartitionEdges: Boolean = true): DataFrame = {
     // prePartitionEdges is the r15 edges-shuffle-once lever, exposed as
     // a parameter ONLY so ScaleBench can A/B it honestly (false =

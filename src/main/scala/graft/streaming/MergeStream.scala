@@ -30,12 +30,12 @@ import graft.sources.Layout
   *     version horizon passes — the RocksDB/Cassandra tombstone-GC
   *     discipline on parquet.
   *
-  * Persistence is write-new-then-repoint per batch (stage the merged
-  * table, swap directories); atomic commit stays delegated to a table
-  * format, as for [[Layout.compact]]. At 100 TB the per-batch rewrite
-  * wants the partition-scoped [[Layout.mergeDatePartitioned]] under the
-  * same collapse + condition — the full-table swap here keeps the
-  * lifecycle spec-checkable on plain directories.
+  * Persistence is write-new-then-repoint per batch: stage the merged
+  * table, then swap it in through [[Layout.publishDirectory]]'s marker
+  * protocol, so a kill between the swap's renames recovers mechanically
+  * on the next call. Atomic visibility is out of scope: a reader listing
+  * the table between the two renames sees it absent. Every batch
+  * rewrites the whole table.
   *
   * Contract: `versionCol` must determine the row — two changes to one
   * key with equal versions and different payloads are a source bug (the
@@ -102,185 +102,6 @@ object MergeStream {
       }
       .option("checkpointLocation", checkpoint)
       .start()
-
-  /** [[applyBatch]] landing through [[graft.sources.SnapshotTable]]
-    * instead of the directory swap: each micro-batch commits ONE atomic
-    * version, so a reader sees a complete pre-batch or post-batch
-    * snapshot — never the swap's rename window — and the retained
-    * version history gives per-batch time travel until vacuum.
-    * EXACTLY-ONCE at two levels: the version condition makes a replayed
-    * merge CONTENT-idempotent regardless, and the `(sinkId, batchId)`
-    * ledger (committed atomically with the batch) makes it VERSION-
-    * idempotent too — a foreachBatch replay after a crash between the
-    * table commit and the checkpoint write mints nothing at all.
-    */
-  def applyBatchSnapshot(spark: SparkSession, table: String, batch: DataFrame,
-                         keys: Seq[String], versionCol: String,
-                         ledger: Option[(String, Long)] = None): Unit = {
-    if (batch.isEmpty) return
-    // a known replay skips BEFORE the collapse window runs (the merge's
-    // internal base-consistent check remains the authoritative backstop)
-    val seen = ledger.exists { case (sinkId, batchId) =>
-      graft.sources.SnapshotTable.lastCommittedBatch(spark, table, sinkId)
-        .exists(_ >= batchId)
-    }
-    if (seen) return
-    val collapsed = collapse(batch, keys, versionCol)
-    if (graft.sources.SnapshotTable.currentVersion(spark, table) == 0L)
-      graft.sources.SnapshotTable.commit(spark, table, collapsed,
-        ledger = ledger)
-    else
-      graft.sources.SnapshotTable.merge(spark, table, collapsed, keys,
-        deleteCol = None,
-        matchedCond = Some(col(s"c.$versionCol") >= col(s"t.$versionCol")),
-        ledger = ledger)
-  }
-
-  /** [[upsertSink]] over the snapshot table format. */
-  def upsertSnapshotSink(changes: DataFrame, table: String, keys: Seq[String],
-                         versionCol: String, checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchSnapshot(batch.sparkSession, table, batch, keys, versionCol,
-          ledger = Some((checkpoint, batchId)))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-
-  /** [[applyBatchSnapshot]] through the FILE-SCOPED merge
-    * ([[graft.sources.SnapshotTable.mergeScoped]]): each micro-batch
-    * rewrites only the data files whose `scopeCol` envelope intersects
-    * the batch's scope values and carries every other manifest line
-    * forward by reference — the Iceberg-style streaming upsert, where
-    * a batch touching one day of a date-scoped table costs one day of
-    * rewrite instead of the table (A/B: the scoped merge widens from
-    * 1.3× at 1M rows to 2.6× at 10M — and the gap is the whole table
-    * size at 100 TB). Same idempotent-replay contract as the
-    * whole-rewrite sink (the version condition makes a replayed batch
-    * a byte-identical version).
-    *
-    * CONTRACT inherited from mergeScoped: `scopeCol` must be
-    * key-stable (a function of the key — an ingest-day stamped at
-    * first sight, a key hash bucket), non-null and LONG-castable; a
-    * key whose scope value moved would duplicate instead of move.
-    */
-  def applyBatchSnapshotScoped(spark: SparkSession, table: String,
-                               batch: DataFrame, keys: Seq[String],
-                               versionCol: String, scopeCol: String,
-                               ledger: Option[(String, Long)] = None): Unit = {
-    if (batch.isEmpty) return
-    // version-level replay skip, as in applyBatchSnapshot
-    val seen = ledger.exists { case (sinkId, batchId) =>
-      graft.sources.SnapshotTable.lastCommittedBatch(spark, table, sinkId)
-        .exists(_ >= batchId)
-    }
-    if (seen) return
-    // persisted: the collapse window is consumed TWICE downstream
-    // (mergeScoped's scope-value collect and the merge join itself) —
-    // uncached it would run per consumer
-    val collapsed = collapse(batch, keys, versionCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyScopedCollapsed(spark, table, collapsed, keys, versionCol,
-      scopeCol, ledger)
-    finally collapsed.unpersist(false)
-  }
-
-  private def applyScopedCollapsed(spark: SparkSession, table: String,
-                                   collapsed: DataFrame, keys: Seq[String],
-                                   versionCol: String, scopeCol: String,
-                                   ledger: Option[(String, Long)]): Unit = {
-    if (graft.sources.SnapshotTable.currentVersion(spark, table) == 0L) {
-      // range-cluster the seed like mergeScoped clusters its rewrites:
-      // contiguous per-file scope envelopes are what lets every later
-      // batch skip the scopes it doesn't touch. The partition count is
-      // EXPLICIT (one per scope value, a one-time distinct at seed):
-      // without it AQE coalesces a small seed into one partition whose
-      // single file spans every scope — and no later batch could ever
-      // skip anything.
-      val nScopes = math.max(1L,
-        collapsed.select(col(scopeCol)).distinct().count()).toInt
-      graft.sources.SnapshotTable.commit(spark, table,
-        collapsed.repartitionByRange(nScopes, col(scopeCol))
-          .sortWithinPartitions(scopeCol),
-        statsCols = Seq(scopeCol), ledger = ledger)
-    }
-    else
-      graft.sources.SnapshotTable.mergeScoped(spark, table, collapsed, keys,
-        scopeCol = scopeCol, deleteCol = None, statsCols = Seq(scopeCol),
-        matchedCond = Some(col(s"c.$versionCol") >= col(s"t.$versionCol")),
-        ledger = ledger)
-  }
-
-  /** [[upsertSnapshotSink]]'s file-scoped twin. */
-  def upsertSnapshotScopedSink(changes: DataFrame, table: String,
-                               keys: Seq[String], versionCol: String,
-                               scopeCol: String,
-                               checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchSnapshotScoped(batch.sparkSession, table, batch, keys,
-          versionCol, scopeCol, ledger = Some((checkpoint, batchId)))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-
-  /** APPEND-ONLY streaming ingest into the snapshot format — the
-    * event-log shape (no keys, no upserts; contrast the CDC sinks
-    * above): each micro-batch lands through
-    * [[graft.sources.SnapshotTable.append]] (manifest union — commit
-    * cost = the batch's bytes regardless of table size), clustered on
-    * `scopeCol` so per-file envelopes stay narrow, and every
-    * `compactEvery` batches [[graft.sources.SnapshotTable.compactScoped]]
-    * repairs the fragmentation appends accumulate (a no-op version-wise
-    * when the table is tidy). Downstream syncs consume
-    * [[graft.sources.SnapshotTable.readAdded]] between versions —
-    * exact CDC, because appends never rewrite.
-    *
-    * EXACTLY-ONCE, not merely at-least-once: every append carries a
-    * `(sinkId = checkpoint path, batchId)` ledger entry that commits
-    * in the SAME atomic manifest rename as the batch's rows
-    * ([[graft.sources.SnapshotTable.append]]'s `ledger`) — a
-    * foreachBatch replay after a crash between the append commit and
-    * the checkpoint write finds its batchId already recorded and lands
-    * ZERO duplicate rows, and [[graft.sources.SnapshotTable.readAdded]]
-    * across the replay still sees the batch exactly once (no version
-    * is minted for the skip). The ledger survives compaction and
-    * whole-snapshot rewrites (all commit paths carry the header
-    * forward).
-    */
-  def appendSink(events: DataFrame, table: String, scopeCol: String,
-                 checkpoint: String, compactEvery: Int = 8,
-                 maxFilesPerScope: Int = 8): StreamingQuery = {
-    require(compactEvery >= 1)
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        appendBatch(batch.sparkSession, table, batch, scopeCol,
-          sinkId = checkpoint, batchId = batchId,
-          compactEvery = compactEvery, maxFilesPerScope = maxFilesPerScope)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
-  }
-
-  /** One [[appendSink]] micro-batch, exposed for direct certification
-    * (the replay spec drives it with a repeated batchId): exactly-once
-    * append via the snapshot ledger, then scheduled compaction — which
-    * fires on the batch COUNTER, not the batch's contents (an empty
-    * batch on the compactEvery-th slot must not silently skip the
-    * maintenance the schedule promised).
-    */
-  def appendBatch(spark: SparkSession, table: String, batch: DataFrame,
-                  scopeCol: String, sinkId: String, batchId: Long,
-                  compactEvery: Int = 8, maxFilesPerScope: Int = 8): Unit = {
-    if (!batch.isEmpty)
-      graft.sources.SnapshotTable.append(spark, table,
-        batch.sortWithinPartitions(scopeCol), statsCols = Seq(scopeCol),
-        ledger = Some((sinkId, batchId)))
-    if ((batchId + 1) % compactEvery == 0 &&
-        graft.sources.SnapshotTable.currentVersion(spark, table) > 0L)
-      graft.sources.SnapshotTable.compactScoped(spark, table, scopeCol,
-        maxFilesPerScope): Unit
-  }
 
   /** The serving view: live rows only (tombstones filtered). */
   def current(spark: SparkSession, path: String, deleteCol: String): DataFrame =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.streaming.MergeStream
 
@@ -8,12 +7,6 @@ import graft.streaming.MergeStream
   * (globally unique in these tests so ties never arise by accident).
   */
 case class Change(id: Long, payload: String, version: Long, deleted: Boolean)
-
-/** [[Change]] plus a key-stable scope column (day = id % 4 in these
-  * tests) for the file-scoped snapshot sink.
-  */
-case class ChangeS(id: Long, day: Long, payload: String, version: Long,
-                   deleted: Boolean)
 
 /** The streaming CDC upsert lifecycle: the maintained table must be a
   * pure function of the max-version change per key — whatever the batch
@@ -72,9 +65,13 @@ class MergeStreamSpec extends SparkSpec {
     val path = tmp("merge-replay")
     val b1 = Seq(Change(1, "a", 10, false), Change(2, "b", 11, false))
     val b2 = Seq(Change(1, "a2", 20, false), Change(3, "c", 21, true))
+    applyBatch(path, Seq.empty) // an empty micro-batch before any commit
+    assert(!new java.io.File(path).exists(), "an empty first batch creates no table")
     applyBatch(path, b1)
     applyBatch(path, b2)
     val committed = tableRows(path)
+    applyBatch(path, Seq.empty)
+    assert(tableRows(path) == committed, "an empty batch changes nothing")
     applyBatch(path, b2) // the replay foreachBatch can deliver
     assert(tableRows(path) == committed, "replay must rewrite byte-identically")
     applyBatch(path, b1) // an even older replay: every row out-versioned
@@ -154,80 +151,6 @@ class MergeStreamSpec extends SparkSpec {
       "applyBatch recovered the pending publish BEFORE merging on top of it")
   }
 
-  test("CDC snapshot sinks with a ledger are VERSION-idempotent under replay, not just content-idempotent") {
-    import spark.implicits._
-    val whole = tmp("cdc-ledger-whole")
-    val scoped = tmp("cdc-ledger-scoped")
-    val sink = "ckpt://cdc-ledger"
-    def b(id: Long, rows: Seq[ChangeS]) = {
-      MergeStream.applyBatchSnapshot(spark, whole, rows.toDF(), Seq("id"),
-        "version", ledger = Some((sink, id)))
-      MergeStream.applyBatchSnapshotScoped(spark, scoped, rows.toDF(), Seq("id"),
-        "version", "day", ledger = Some((sink, id)))
-    }
-    b(0L, Seq(ChangeS(1, 1, "a", 1, false), ChangeS(2, 2, "b", 2, false)))
-    b(1L, Seq(ChangeS(1, 1, "a2", 3, false)))
-    val vWhole = graft.sources.SnapshotTable.currentVersion(spark, whole)
-    val vScoped = graft.sources.SnapshotTable.currentVersion(spark, scoped)
-    // the crash-replay of batch 1: WITHOUT the ledger this re-merges
-    // idempotently but mints an extra byte-identical version; with it,
-    // nothing at all happens
-    b(1L, Seq(ChangeS(1, 1, "a2", 3, false)))
-    assert(graft.sources.SnapshotTable.currentVersion(spark, whole) == vWhole &&
-      graft.sources.SnapshotTable.currentVersion(spark, scoped) == vScoped,
-      "replays mint no version")
-    // an even older replay: also nothing
-    b(0L, Seq(ChangeS(1, 1, "a", 1, false), ChangeS(2, 2, "b", 2, false)))
-    assert(graft.sources.SnapshotTable.currentVersion(spark, whole) == vWhole &&
-      graft.sources.SnapshotTable.currentVersion(spark, scoped) == vScoped)
-    // content is the max-version row per key on both lanes
-    Seq(whole, scoped).foreach { t =>
-      val got = graft.sources.SnapshotTable.read(spark, t)
-        .select("id", "payload").as[(Long, String)].collect().toSet
-      assert(got == Set((1L, "a2"), (2L, "b")), s"$t: $got")
-    }
-    // and the NEXT real batch still lands
-    b(2L, Seq(ChangeS(3, 3, "c", 4, false)))
-    assert(graft.sources.SnapshotTable.read(spark, whole).count() == 3 &&
-      graft.sources.SnapshotTable.read(spark, scoped).count() == 3)
-  }
-
-  test("appendBatch is exactly-once under replay; scheduled compaction fires on empty batches") {
-    import spark.implicits._
-    val table = tmp("append-batch")
-    val sink = "ckpt://append-batch-test"
-    def batch(day: Long, n: Int, tag: String): DataFrame =
-      (0 until n).map(i => (day * 100L + i, day, s"$tag-$i")).toDF("k", "day", "v")
-    def run(id: Long, df: DataFrame): Unit =
-      MergeStream.appendBatch(spark, table, df, "day", sink, id,
-        compactEvery = 4, maxFilesPerScope = 2)
-    run(0L, batch(0L, 10, "b0"))
-    val v1 = graft.sources.SnapshotTable.currentVersion(spark, table)
-    // the crash-replay: foreachBatch re-delivers batch 0 after a crash
-    // between the table commit and the checkpoint write
-    run(0L, batch(0L, 10, "b0"))
-    assert(graft.sources.SnapshotTable.currentVersion(spark, table) == v1 &&
-      graft.sources.SnapshotTable.read(spark, table).count() == 10,
-      "replayed batch lands zero duplicate rows, mints no version")
-    // fragment one scope with two more appends...
-    run(1L, batch(0L, 3, "b1"))
-    run(2L, batch(0L, 3, "b2"))
-    val fragmented = graft.sources.SnapshotTable.snapshotFiles(spark, table).size
-    assert(fragmented >= 3, s"three appends fragment the scope: $fragmented files")
-    // ...then the compactEvery-th batch is EMPTY: maintenance must fire
-    // anyway (the schedule is the counter, not the contents)
-    run(3L, Seq.empty[(Long, Long, String)].toDF("k", "day", "v"))
-    val after = graft.sources.SnapshotTable.snapshotFiles(spark, table).size
-    assert(after <= 2, s"compaction fired on the empty scheduled batch: $after files")
-    assert(graft.sources.SnapshotTable.read(spark, table).count() == 16)
-    // the ledger survived the compaction: replays of batches 0-2 skip
-    Seq(0L -> 10, 1L -> 3, 2L -> 3).foreach { case (id, n) =>
-      run(id, batch(0L, n, s"b$id"))
-    }
-    assert(graft.sources.SnapshotTable.read(spark, table).count() == 16,
-      "post-compaction replays all skip via the carried ledger")
-  }
-
   test("upsertSink maintains the table through a checkpointed restart") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -253,118 +176,5 @@ class MergeStreamSpec extends SparkSpec {
     val served = MergeStream.current(spark, path, "deleted")
       .as[Change].collect().toSet
     assert(served == Set(Change(1, "a2", 3, false)))
-  }
-
-  test("upsertSnapshotSink commits one atomic version per batch; history time-travels") {
-    import spark.implicits._
-    import graft.sources.SnapshotTable
-    implicit val sqlCtx = spark.sqlContext
-    val table = tmp("merge-snap")
-    val ckpt = java.nio.file.Files.createTempDirectory("merge-snap-ckpt").toString
-    val input = MemoryStream[Change]
-    val q = MergeStream.upsertSnapshotSink(
-      input.toDF(), table, Seq("id"), "version", ckpt)
-    try {
-      val batch1 = Seq(Change(1, "a", 1, false), Change(2, "b", 2, false))
-      input.addData(batch1)
-      q.processAllAvailable()
-      val v1 = SnapshotTable.currentVersion(spark, table)
-      val batch2 = Seq(Change(1, "a2", 3, false), Change(3, "c", 4, false))
-      input.addData(batch2)
-      q.processAllAvailable()
-      // HEAD = the full merged state, one atomic version per batch
-      assert(SnapshotTable.currentVersion(spark, table) > v1)
-      assert(SnapshotTable.read(spark, table).as[Change].collect().toSet
-        == brute(batch1 ++ batch2))
-      // the pre-batch-2 snapshot is still a CONSISTENT whole table —
-      // the mixed-version window the directory swap cannot rule out
-      assert(SnapshotTable.read(spark, table, version = v1)
-        .as[Change].collect().toSet == brute(batch1))
-    } finally q.stop()
-  }
-
-  test("appendSink ingests append-only batches; compaction bounds files; readAdded is per-batch CDC") {
-    import spark.implicits._
-    import graft.sources.SnapshotTable
-    implicit val sqlCtx = spark.sqlContext
-    val table = tmp("append-snap")
-    val ckpt = java.nio.file.Files.createTempDirectory("append-ckpt").toString
-    val input = MemoryStream[(Long, Long, String)]
-    val q = MergeStream.appendSink(
-      input.toDF().toDF("event_id", "day", "payload"), table, "day", ckpt,
-      compactEvery = 4, maxFilesPerScope = 3)
-    try {
-      var versions = List.empty[Long]
-      (0 until 8).foreach { b =>
-        // every batch hits day 1 (the hot scope) plus its own day
-        input.addData(Seq((b * 10L, 1L, s"hot$b"), (b * 10L + 1L, b.toLong, s"cold$b")))
-        q.processAllAvailable()
-        versions ::= SnapshotTable.currentVersion(spark, table)
-      }
-      // content = the union of every batch (append-only)
-      val got = SnapshotTable.read(spark, table)
-        .as[(Long, Long, String)].collect().toSet
-      val want = (0 until 8).flatMap(b =>
-        Seq((b * 10L, 1L, s"hot$b"), (b * 10L + 1L, b.toLong, s"cold$b"))).toSet
-      assert(got == want, "append-only union")
-      // periodic compaction bounds the hot scope's file count
-      val day1Files = SnapshotTable.snapshotEntries(spark, table)
-        .count(_.stats.get("day").exists { case (lo, hi) => lo <= 1L && hi >= 1L })
-      assert(day1Files <= 4, s"compaction bounds fragmentation: $day1Files files on day 1")
-      // incremental consumption between two APPEND versions = that batch
-      val inc = SnapshotTable.readAdded(spark, table,
-        fromVersion = versions(7), toVersion = versions(6))
-        .as[(Long, Long, String)].collect().toSet
-      assert(inc == Set((10L, 1L, "hot1"), (11L, 1L, "cold1")),
-        s"readAdded between append versions is the batch: $inc")
-    } finally q.stop()
-  }
-
-  test("upsertSnapshotScopedSink: batches rewrite only touched scopes; untouched files carry by reference") {
-    import spark.implicits._
-    import graft.sources.SnapshotTable
-    implicit val sqlCtx = spark.sqlContext
-    val table = tmp("merge-snap-scoped")
-    val ckpt = java.nio.file.Files.createTempDirectory("merge-scoped-ckpt").toString
-    def ch(id: Long, p: String, v: Long, del: Boolean = false) =
-      ChangeS(id, id % 4, p, v, del)
-    val input = MemoryStream[ChangeS]
-    val q = MergeStream.upsertSnapshotScopedSink(
-      input.toDF(), table, Seq("id"), "version", "day", ckpt)
-    try {
-      // batch 1 seeds all four days
-      val batch1 = (0L until 16L).map(i => ch(i, s"p$i", i))
-      input.addData(batch1)
-      q.processAllAvailable()
-      val v1 = SnapshotTable.currentVersion(spark, table)
-      val v1Entries = SnapshotTable.snapshotEntries(spark, table, v1)
-      assert(v1Entries.forall(_.stats.contains("day")),
-        "seed commit carries scope envelopes")
-      // batch 2 touches ONLY day 1 keys (1, 5, 13 ≡ 1 mod 4)
-      val batch2 = Seq(ch(1L, "UPD", 100L), ch(5L, "", 101L, del = true),
-        ch(13L, "NEW13b", 102L))
-      input.addData(batch2)
-      q.processAllAvailable()
-      val v2 = SnapshotTable.currentVersion(spark, table)
-      assert(v2 > v1, "one version per batch")
-      // content = the CDC ground truth (tombstones retained as rows)
-      val all = batch1 ++ batch2
-      val want = all.groupBy(_.id).values.map(_.maxBy(_.version)).toSet
-      assert(SnapshotTable.read(spark, table).as[ChangeS].collect().toSet
-        == want, "scoped sink maintains the max-version-per-key table")
-      // files whose envelope excludes day=1 survive BY REFERENCE
-      val v2Lines = SnapshotTable.snapshotEntries(spark, table, v2)
-        .map(_.render).toSet
-      val untouched = v1Entries.filter(e =>
-        e.stats.get("day").exists { case (lo, hi) => hi < 1L || lo > 1L })
-      assert(untouched.nonEmpty, "need provably-untouched day files")
-      untouched.foreach(e => assert(v2Lines.contains(e.render),
-        s"untouched scope file rewritten: ${e.render}"))
-      // idempotent replay: re-merging batch2 lands a byte-identical table
-      MergeStream.applyBatchSnapshotScoped(spark, table, batch2.toDF(),
-        Seq("id"), "version", "day")
-      assert(SnapshotTable.read(spark, table).as[ChangeS].collect().toSet
-        == want, "replay is content-idempotent")
-    } finally q.stop()
   }
 }

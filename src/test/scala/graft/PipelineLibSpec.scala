@@ -98,25 +98,23 @@ class PipelineLibSpec extends SparkSpec {
     assert(got(20L) == 20L && got(21L) == 20L)
   }
 
-  test("Dedup.clusters probeSeed converges on cliques with zero rounds, agrees on chains") {
+  test("Dedup.clusters converges on cliques with zero rounds and resolves chains") {
     import spark.implicits._
     // cliques/stars (the verbatim-copy graph): seed IS the fixpoint, so
-    // probeSeed must converge with maxIter = 0 (no propagation round)
+    // the fused convergence check must stop at maxIter = 0 (no
+    // propagation round)
     val cliques = Seq((0L, 1L), (0L, 2L), (1L, 2L), (10L, 11L), (10L, 12L))
       .toDF("a_id", "b_id")
-    val fast = Dedup.clusters(cliques, maxIter = 0, probeSeed = true).collect()
+    val fast = Dedup.clusters(cliques, maxIter = 0).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(Seq(0L, 1L, 2L).forall(fast(_) == 0L))
     assert(Seq(10L, 11L, 12L).forall(fast(_) == 10L))
-    // a chain defeats the seed probe (label(2)=1 ≠ label(0)=0 on edge
-    // 0–1? no: label(0)=0, label(1)=0, label(2)=1 — edge 1–2 differs),
-    // and both paths must agree on the result
+    // a chain is not a fixpoint at seed (label(1)=0, label(2)=1 differ
+    // on edge 1–2), so it must propagate to component 0
     val chain = (0L until 5L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-    val a = Dedup.clusters(chain, probeSeed = true).collect()
+    val got = Dedup.clusters(chain).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val b = Dedup.clusters(chain, probeSeed = false).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(a == b && (0L to 5L).forall(a(_) == 0L))
+    assert((0L to 5L).forall(got(_) == 0L))
   }
 
   test("Dedup.clusters refuses to return partially-propagated labels") {
