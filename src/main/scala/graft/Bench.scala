@@ -1,13 +1,16 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Benchmark main: times every SparkEntry query at the target SF and
   * prints one JSON line. Reports steady-state times — a warmup pass
   * first runs each query once so JIT/codegen compilation and parquet
   * footer caching are excluded from the measurement (classic JVM
   * benchmark hygiene; the 100 TB question is throughput, not first-call
-  * compile latency).
+  * compile latency). The run that gives each key its minimum also
+  * records where the time went — construction, planning phases, Spark
+  * counters — into the per-key artifact.
   */
 object Bench {
   /** Renders the two stdout lines: (per-query map line, compact total line).
@@ -24,112 +27,41 @@ object Bench {
     * [[perKeyJson]] file artifact instead).
     */
   def render(results: Seq[(String, Double)], sfDir: String): (String, String) = {
-    val qs = results.map { case (k, v) =>
-      "\"" + k + "\":" +
-        String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    }.mkString("{", ",", "}")
+    val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      .mkString("{", ",", "}")
     val failed = results.collect { case (k, v) if v < 0 => k }
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     val failedJson = (failed.take(30) ++ (if (failed.size > 30) Seq("...") else Nil))
       .map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Locale.ROOT: under a comma-decimal default locale f"%.3f" would emit
-    // "30,868" — invalid JSON — and silently break the driver's tail parse.
-    val totalStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(total))
     (s"""{"metric":"queries","queries":$qs,"sf":"$sfDir"}""",
-     s"""{"metric":"total","value":$totalStr,"unit":"sec","failed":$failedJson,"failed_n":${failed.size},"sf":"$sfDir"}""")
+     s"""{"metric":"total","value":${f3(total)},"unit":"sec","failed":$failedJson,"failed_n":${failed.size},"sf":"$sfDir"}""")
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // Shuffle width is sized for the benchmark data, not the core count:
     // sf0.1 is ~17 MB, so wide shuffles are pure task-scheduling overhead
     // (the same reasoning AQE applies on a cluster via advisory partition
     // sizes). Override with SPARK_GRAFT_SHUFFLE to re-measure wider.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      // readers are pure: the NANOS-as-long legacy flag is session config
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.ui.enabled", "false")
-    // dev sweep knob: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" layers arbitrary
-    // session confs for one-off measurements (the driver never sets it,
-    // so driver runs always measure the defaults above). Entries split
-    // on ';' — and on ',' ONLY where the next segment looks like a conf
-    // key (round-8 advice: a value legitimately containing commas, e.g.
-    // spark.executor.extraJavaOptions, must not be mis-split into
-    // malformed fragments); each applied pair is logged to stderr so a
-    // sweep run can see what was actually set.
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";"))
-      .flatMap { seg =>
-        // within a ';' segment, re-join ','-fragments that do NOT start
-        // a new key=... entry back onto the previous entry's value
-        // "starts a new entry" = a DOTTED key beginning with a letter
-        // ("spark.sql.x=..."), so a value fragment like "-Db=2" inside
-        // extraJavaOptions can never be mistaken for one
-        seg.split(",").foldLeft(List.empty[String]) { (acc, frag) =>
-          if (frag.matches("[A-Za-z][A-Za-z0-9_-]*(\\.[A-Za-z0-9_-]+)+=.*")
-              || acc.isEmpty) frag :: acc
-          else (acc.head + "," + frag) :: acc.tail
-        }.reverse
-      }
-      .filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        System.err.println(s"[bench] extra conf: $k=$v")
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
+    val spark = GraftSession.fromEnv(4, Some(8)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // dev convenience: SPARK_GRAFT_ONLY=q1,q2 times just those queries
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => EnvOnly.keep(n) }
-    // Two measurement semantics, both recorded in BASELINE.md:
-    //  - default `count()`: comparable with rounds 1-2 and the driver's
-    //    BASELINE anchor, but ColumnPruning deletes columns a count
-    //    never reads, so window/projection expressions are partially
-    //    optimized away (a count over a window query is a legal,
-    //    cheaper query — that IS what count() asks for);
-    //  - SPARK_GRAFT_FULL_EVAL=true: toRdd runs the query exactly as
-    //    written, every output column materialized — the honest cost a
-    //    consumer of the full result pays (sf0.1: ~51 s vs ~26-32 s).
-    val fullEval = sys.env.get("SPARK_GRAFT_FULL_EVAL").contains("true")
-    def exec(df: org.apache.spark.sql.DataFrame): Long =
-      if (fullEval) df.queryExecution.toRdd.count() else df.count()
-    // SPARK_GRAFT_PREPARED=true: construct + analyze each DataFrame
-    // ONCE at prepare time, timing only the per-execution pipeline
-    // (count-plan build, optimizer, physical planning, AQE, the job).
-    // Measured round 8 (BASELINE.md): NO total win — 39.3 s
-    // constructed-in-clock vs 39.7 s prepared at 149 keys — so Dataset
-    // construction/analysis is NOT the per-key floor (optimizer +
-    // scheduling + execution are), and prepared mode is NOT the default
-    // because it silently hoists driver-side work some queries do at
-    // construction (dedup_components' iterative localCheckpoint loop:
-    // 1.53 s → 0.12 s, i.e. the checkpoint, not the query, gets timed).
-    // The flag stays as a measurement instrument.
-    val preparedMode = sys.env.get("SPARK_GRAFT_PREPARED").contains("true")
-    val prepared: Seq[(String, () => org.apache.spark.sql.DataFrame)] =
-      ordered.map { case (name, fn) =>
-        if (preparedMode) {
-          // a query whose CONSTRUCTION throws falls back to per-call
-          // construction so the timed pass reports it as -1, same as
-          // unprepared mode (prepare must not crash the whole bench)
-          try { val df = fn(spark, sfDir); name -> (() => df) }
-          catch { case _: Throwable => name -> (() => fn(spark, sfDir)) }
-        } else name -> (() => fn(spark, sfDir))
-      }
     // warmup: compile + execute each query once (failures ignored here;
     // the timed passes report a failed query as -1)
-    prepared.foreach { case (_, mk) =>
-      try exec(mk()) catch { case _: Throwable => () }
+    ordered.foreach { case (_, fn) =>
+      try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
+    val recorder = GraftRecorder.attach(spark.sparkContext)
+    // the planning phases of each key's `count` action; the listener
+    // runs on the listener bus, so they are final after recorder.settle()
+    val phases = new java.util.concurrent.atomic.AtomicReference(Map.empty[String, Long])
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "count") phases.set(qe.tracker.phases.map { case (p, s) => p -> s.durationMs })
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    })
     // several timed passes, keep each query's minimum: single-JVM timings
     // jitter ±30% from GC/JIT recompilation, and the min is the honest
     // steady-state cost of the plan (classic benchmark hygiene). Default
@@ -139,24 +71,37 @@ object Bench {
     // a failed key keeps its first failure's `ExceptionClass: message`,
     // on stderr and in the per-key artifact
     val reasons = scala.collection.mutable.Map.empty[String, String]
+    // counts `df.count()`, not the full result: ColumnPruning deletes
+    // columns a count never reads — comparable with every earlier round
+    // and BASELINE.md's anchor
     val passes = (1 to iters).map { _ =>
-      prepared.map { case (name, mk) =>
+      ordered.map { case (name, fn) =>
+        recorder.reset()
+        phases.set(Map.empty)
         val t0 = System.nanoTime()
-        val ok = try { exec(mk()); true } catch { case e: Throwable =>
+        name -> (try {
+          val df = fn(spark, sfDir)
+          val constructMs = (System.nanoTime() - t0) / 1e6
+          df.count()
+          val sec = (System.nanoTime() - t0) / 1e9
+          val counters = recorder.settle() // before reading the phases it settles
+          Some(KeyRun(sec, constructMs, phases.get, counters))
+        } catch { case e: Throwable =>
           if (!reasons.contains(name)) {
             reasons(name) = e.toString
             System.err.println(s"[bench] $name failed: $e")
           }
-          false
-        }
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-      }
+          None
+        })
+      }.toMap
     }
     val loadAfter = loadavg()
-    val results = ordered.map { case (name, _) =>
-      val ts = passes.map(_.find(_._1 == name).get._2)
-      name -> (if (ts.exists(_ < 0)) -1.0 else ts.min)
+    // the run with the key's minimum wall time, and the counters of that run
+    val best = ordered.map { case (name, _) =>
+      val runs = passes.map(_(name))
+      name -> (if (runs.exists(_.isEmpty)) None else Some(runs.flatten.minBy(_.sec)))
     }
+    val results = best.map { case (name, r) => name -> r.fold(-1.0)(_.sec) }
     val (queriesLine, totalLine) = render(results, sfDir)
     // full-precision per-key artifact ON DISK (round-8 advice: the
     // driver's BENCH_r*.json keeps only a fixed-size stdout tail, which
@@ -172,7 +117,8 @@ object Bench {
     // host-steal window (ratio ≫ 1) without consulting the narrative.
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_PERKEY.json"),
-      perKeyJson(results, sfDir, loadBefore, loadAfter, reasons.toMap) + "\n")
+      perKeyJson(results, sfDir, loadBefore, loadAfter, reasons.toMap,
+        best.collect { case (name, Some(r)) => name -> r }.toMap) + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[bench] per-key artifact write failed: ${e.getMessage}")
     }
@@ -187,33 +133,36 @@ object Bench {
       java.nio.file.Paths.get("/proc/loadavg"))).split(" ")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Median per-key ratio of `results` against the quiet-floor map in
-    * BENCH_PERKEY_QUIET.json (shared keys only), or -1 when the
-    * reference is absent/unparseable. The reference format is our own
-    * perKeyJson, so a targeted regex parse suffices — key names are
-    * [a-z0-9_] by construction.
+  /** Median per-key ratio of `results` against the `queries` map of a
+    * reference artifact (shared keys only), or -1 when the reference is
+    * empty or unparseable. Only that one field is read, wherever it sits
+    * and whatever other fields the artifact carries.
     */
-  private def ratioVsQuietFloor(results: Seq[(String, Double)]): Double =
+  private[graft] def ratioVsQuietFloor(results: Seq[(String, Double)], reference: String): Double =
     try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("BENCH_PERKEY_QUIET.json")))
-      val ref = "\"([a-z0-9_]+)\":([0-9]+\\.[0-9]+)".r
-        .findAllMatchIn(txt.substring(txt.indexOf("\"queries\"")))
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      val ref = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(reference).get("queries")
       val ratios = results.collect {
-        case (k, v) if v > 0 && ref.get(k).exists(_ > 0) => v / ref(k)
+        case (k, v) if v > 0 && ref.path(k).asDouble > 0 => v / ref.get(k).asDouble
       }.sorted
       if (ratios.isEmpty) -1.0 else ratios(ratios.size / 2)
     } catch { case _: Throwable => -1.0 }
 
+  /** Locale.ROOT: under a comma-decimal default locale f"%.3f" would emit
+    * "30,868" — invalid JSON — and silently break every reader of the lines.
+    */
+  private def f3(x: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
+
   /** The on-disk per-key artifact: full-precision seconds per key plus
     * the same total/failed summary as the stdout total line, each
     * failed key's reason, stamped with the run's own window identity
-    * (see the write site).
+    * (see the write site), and under `layers` the numbers of each
+    * key's minimum-wall run.
     */
   def perKeyJson(results: Seq[(String, Double)], sfDir: String,
                  loadBefore: Double = -1.0, loadAfter: Double = -1.0,
-                 reasons: Map[String, String] = Map.empty): String = {
+                 reasons: Map[String, String] = Map.empty,
+                 layers: Map[String, KeyRun] = Map.empty): String = {
     def quote(x: String): String = "\"" + new String(
       com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance.quoteAsString(x)) + "\""
     val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
@@ -221,13 +170,30 @@ object Bench {
     val failed = results.collect { case (k, v) if v < 0 => "\"" + k + "\"" }
     val why = results.collect { case (k, _) if reasons.contains(k) =>
       quote(k) + ":" + quote(reasons(k)) }.mkString("{", ",", "}")
+    val perKey = results.collect { case (k, _) if layers.contains(k) =>
+      "\"" + k + "\":" + layers(k).json }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
-    val totalStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(total))
-    val ratio = ratioVsQuietFloor(results)
-    val ratioStr = String.format(java.util.Locale.ROOT, "%.3f", Double.box(ratio))
-    s"""{"metric":"queries_full","total":$totalStr,"n":${results.size},""" +
-      s""""median_ratio_vs_quiet_floor":$ratioStr,""" +
+    val reference = try java.nio.file.Files.readString(
+      java.nio.file.Paths.get("BENCH_PERKEY_QUIET.json")) catch { case _: Throwable => "" }
+    s"""{"metric":"queries_full","total":${f3(total)},"n":${results.size},""" +
+      s""""median_ratio_vs_quiet_floor":${f3(ratioVsQuietFloor(results, reference))},""" +
       s""""loadavg_before":$loadBefore,"loadavg_after":$loadAfter,""" +
-      s""""failed":${failed.mkString("[", ",", "]")},"reasons":$why,"sf":"$sfDir","queries":$qs}"""
+      s""""failed":${failed.mkString("[", ",", "]")},"reasons":$why,"sf":"$sfDir",""" +
+      s""""queries":$qs,"layers":$perKey}"""
+  }
+
+  /** One timed run of one key: its wall seconds, the time to build its
+    * DataFrame (the SparkEntry call), the planning phases of its `count`
+    * action, and the Spark counters of the whole run.
+    */
+  final case class KeyRun(sec: Double, constructMs: Double,
+                          phasesMs: Map[String, Long], counters: JobCounters) {
+    def json: String = {
+      val phases = Seq("analyze_ms" -> "analysis", "optimize_ms" -> "optimization",
+        "plan_ms" -> "planning").map { case (n, p) => n -> phasesMs.getOrElse(p, -1L).toString }
+      (Seq("construct_ms" -> f3(constructMs)) ++ phases ++
+        counters.fields.map { case (n, v) => n -> v.toString })
+        .map { case (n, v) => "\"" + n + "\":" + v }.mkString("{", ",", "}")
+    }
   }
 }

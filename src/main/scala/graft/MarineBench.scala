@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throughput benchmark for the reference's actual workload: NMEA log →
@@ -56,13 +55,7 @@ object MarineBench {
     val outPath = s"$workDir/replay"
     generate(logPath, nLines)
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.fromEnv(4).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // warmup on a slice so codegen compile isn't in the measurement

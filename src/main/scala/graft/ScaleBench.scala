@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.GraftListenerBus
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,10 +14,12 @@ import org.apache.spark.sql.functions._
   *   sbt "runMain graft.ScaleBench"           # 10× (default)
   *   SPARK_GRAFT_SCALE=30 sbt "runMain ..."   # 30×
   *
-  * SPARK_GRAFT_SHUFFLE overrides the shuffle width (default = cpus): on
-  * a cluster the fact-fact shuffle widens with the executor count, and
-  * sweeping this locally shows which curves are shuffle-width-bound
-  * (the 30× star join) versus genuinely super-linear.
+  * The session comes from [[GraftSession.fromEnv]] at 32 cpus:
+  * SPARK_GRAFT_CPUS sets the width, and SPARK_GRAFT_SHUFFLE the shuffle
+  * width (default = cpus). On a cluster the fact-fact shuffle widens
+  * with the executor count, and sweeping SPARK_GRAFT_SHUFFLE locally
+  * shows which curves are shuffle-width-bound (the 30× star join) versus
+  * genuinely super-linear.
   */
 object ScaleBench {
 
@@ -161,19 +162,12 @@ object ScaleBench {
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = s"/tmp/graft_scale_x$copies"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.sql.session.timeZone", "UTC")
+    val spark = GraftSession.fromEnv(32)
       // bucketed-table rows below saveAsTable into the scale corpus dir,
       // not the repo cwd
       .config("spark.sql.warehouse.dir", s"$out/warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
     val lineitem = replicate(spark, src, "lineitem", copies, Seq("l_orderkey"), out)
     val events = Tables.normalizeEventsTs(
@@ -324,31 +318,17 @@ object ScaleBench {
     // peak execution memory and summed spill bytes over the TIMED pass
     // (guide §5: a shape whose buffers cannot spill is an OOM at scale,
     // not a slowdown; the bigram_logprob long-doc rows exist to measure
-    // exactly that). Listener-based, reset per row like JobProbe.
-    val peakMem = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spilled = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufWr = new java.util.concurrent.atomic.AtomicLong(0L)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-          if (e.taskMetrics != null) {
-            peakMem.getAndAccumulate(e.taskMetrics.peakExecutionMemory, math.max)
-            spilled.addAndGet(e.taskMetrics.memoryBytesSpilled)
-            shufWr.addAndGet(e.taskMetrics.shuffleWriteMetrics.bytesWritten)
-          }
-      })
+    // exactly that). The recorder is reset per row, so the counters hold
+    // the timed pass of that row only.
+    val recorder = GraftRecorder.attach(spark.sparkContext)
 
-    def t(label: String)(f: => Long): (String, () => (Double, Long, Long, Long, Long)) =
+    def t(label: String)(f: => Long): (String, () => (Double, Long, JobCounters)) =
       label -> { () =>
         f // warm
-        // drain the async listener queue so the counters hold this row only
-        GraftListenerBus.settle(spark.sparkContext)
-        peakMem.set(0L); spilled.set(0L); shufWr.set(0L)
+        recorder.reset()
         val t0 = System.nanoTime(); val n = f
         val sec = (System.nanoTime() - t0) / 1e9
-        GraftListenerBus.settle(spark.sparkContext)
-        (sec, n, peakMem.get(), spilled.get(), shufWr.get())
+        (sec, n, recorder.settle())
       }
 
     /** Scoped runtime-bloom-filter config for the A/B pair below: the
@@ -1426,9 +1406,10 @@ object ScaleBench {
     // sweeps, e.g. the shuffle-width series on the star shape) — same
     // knob name as Bench/Verify
     val results = ops.filter { case (k, _) => EnvOnly.keep(k) }
-      .map { case (k, run) => val (s, n, pk, sp, sw) = run(); (k, s, n, pk, sp, sw) }
-    val qs = results.map { case (k, s, n, pk, sp, sw) =>
-      s""""$k":{"sec":$s,"rows":$n,"peak_task_mem":$pk,"spilled":$sp,"shuffle_written":$sw}""" }
+      .map { case (k, run) => val (s, n, c) = run(); (k, s, n, c) }
+    val qs = results.map { case (k, s, n, c) =>
+      s""""$k":{"sec":$s,"rows":$n,"peak_task_mem":${c.peakExecMemBytes},""" +
+        s""""spilled":${c.spillBytes},"shuffle_written":${c.shuffleWriteBytes}}""" }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
     val shuffle = spark.conf.get("spark.sql.shuffle.partitions")

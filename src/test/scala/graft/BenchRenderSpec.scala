@@ -36,6 +36,22 @@ class BenchRenderSpec extends AnyFunSuite {
     assert(json.contains("\"n\":2"))
   }
 
+  test("quiet-floor ratio reads only the queries map, whatever else the artifact carries") {
+    val floor = Seq("q_a" -> 1.0, "q_b" -> 2.0, "q_c" -> 4.0)
+    val run = Seq("q_a" -> 3.0, "q_b" -> 2.0, "q_c" -> 2.0) // ratios 3, 1, 0.5
+    val plain = Bench.perKeyJson(floor, "/sf")
+    // decimal phase timings and counters beside (and after) the queries map
+    val layered = Bench.perKeyJson(floor, "/sf", layers = floor.map { case (k, v) =>
+      k -> Bench.KeyRun(v, 7.25, Map("analysis" -> 3L, "planning" -> 5L),
+        JobCounters(jobs = 2, tasks = 9, taskMs = 40))
+    }.toMap)
+    assert(layered.contains("\"layers\":{\"q_a\":{\"construct_ms\":7.250,\"analyze_ms\":3," +
+      "\"optimize_ms\":-1,\"plan_ms\":5,\"jobs\":2,"), layered)
+    assert(Bench.ratioVsQuietFloor(run, plain) == 1.0)
+    assert(Bench.ratioVsQuietFloor(run, layered) == 1.0)
+    assert(Bench.ratioVsQuietFloor(run, "") == -1.0)
+  }
+
   test("per-query stdout values are locale-independent") {
     val prev = java.util.Locale.getDefault
     try {

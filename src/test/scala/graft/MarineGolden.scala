@@ -43,10 +43,7 @@ object MarineGolden {
 /** Dev tool — regenerates the golden files in-place. */
 object MarineGoldenWriter {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder(4, 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val log = NmeaFixture.write(Files.createTempDirectory("nmea").toString)
     Files.createDirectories(Paths.get(MarineGolden.resourceDir))

@@ -113,4 +113,19 @@ class ObservabilitySpec extends SparkSpec {
       assert(gs > 0.2, s"$st skew should be positive: $gs")
     }
   }
+
+  test("GraftRecorder counts the jobs, stages and tasks between a reset and a settle") {
+    val sc = spark.sparkContext
+    val recorder = GraftRecorder.attach(sc)
+    try {
+      recorder.reset()
+      sc.parallelize(1 to 9, 3).count()
+      sc.parallelize(1 to 9, 3).count()
+      val c = recorder.settle()
+      assert((c.jobs, c.stages, c.tasks) == (2L, 2L, 6L), c)
+      assert(c.taskMs >= c.maxTaskMs, c)
+      recorder.reset()
+      assert(recorder.settle() == JobCounters())
+    } finally sc.removeSparkListener(recorder)
+  }
 }
