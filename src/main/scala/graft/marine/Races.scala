@@ -1,12 +1,12 @@
 package graft.marine
 
-import org.apache.spark.sql.{DataFrame}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Race segmentation, maneuver detection, summaries, replay export
   * (SURVEY.md §2.10). Input is the wide aligned channel table from
-  * `Channels.align`: (ts seconds, lat, lon, sog, hdg, twa, tws, ...).
+  * `Marine.wideTable`: (ts seconds, lat, lon, sog, hdg, twa, tws, ...).
   */
 object Races {
 
@@ -51,9 +51,7 @@ object Races {
     races
       .withColumn("prev_twa", lag("twa", 1).over(w))
       .withColumn("prev_sog", lag("sog", 1).over(w))
-      .filter(col("prev_twa").isNotNull &&
-        signum(col("twa")) =!= signum(col("prev_twa")) &&
-        abs(col("twa")) > 5 && abs(col("prev_twa")) > 5)
+      .filter(isManeuver(col("twa"), col("prev_twa")))
       .select(
         (keys.map(col) :+ col("race_id")) ++ Seq(
         col("ts").as("maneuver_ts"),
@@ -66,22 +64,35 @@ object Races {
         (col("prev_sog") - col("sog")).as("speed_loss")): _*)
   }
 
+  /** The maneuver test on one sample and its predecessor in the race:
+    * the true-wind angle changes sign, both sides clear of a ±5° dead
+    * band. `maneuversByKey` filters on it and `statsByKey` counts it.
+    */
+  private def isManeuver(twa: Column, prevTwa: Column): Column =
+    prevTwa.isNotNull && signum(twa) =!= signum(prevTwa) &&
+      abs(twa) > 5 && abs(prevTwa) > 5
+
   /** Per-race summary statistics (SURVEY.md §2.10 race_stats): duration,
     * distance (haversine between consecutive fixes), speed and wind
     * ranges, maneuver count.
     */
   def stats(races: DataFrame): DataFrame = statsByKey(races, Nil)
 
+  /** One window (the lags of lat, lon and twa) and one aggregate: the
+    * maneuver count rides the same pass as the distance, so the input
+    * plan runs once. A group whose key is null gets its true maneuver
+    * count (an equi-join against `maneuversByKey` would give it 0);
+    * neither `race_id` nor `boat_id` is ever null.
+    */
   def statsByKey(races: DataFrame, keys: Seq[String]): DataFrame = {
     val grp = keys :+ "race_id"
     val w = Window.partitionBy(grp.map(col): _*).orderBy("ts")
-    val withDist = races
+    races
       .withColumn("leg_m",
         Derived.haversineM(lag("lat", 1).over(w), lag("lon", 1).over(w),
           col("lat"), col("lon")))
-    val m = maneuversByKey(races, keys).groupBy(grp.map(col): _*)
-      .agg(count(lit(1)).as("n_maneuvers"))
-    withDist.groupBy(grp.map(col): _*)
+      .withColumn("maneuver", isManeuver(col("twa"), lag("twa", 1).over(w)))
+      .groupBy(grp.map(col): _*)
       .agg(
         count(lit(1)).as("n_samples"),
         (max("ts") - min("ts")).as("duration_s"),
@@ -89,9 +100,8 @@ object Races {
         round(max("sog"), 2).as("max_sog"),
         round(avg("sog"), 2).as("avg_sog"),
         round(min("tws"), 2).as("min_tws"),
-        round(max("tws"), 2).as("max_tws"))
-      .join(m, grp, "left")
-      .withColumn("n_maneuvers", coalesce(col("n_maneuvers"), lit(0L)))
+        round(max("tws"), 2).as("max_tws"),
+        count(when(col("maneuver"), 1)).as("n_maneuvers"))
       .orderBy(grp.map(col): _*)
   }
 

@@ -12,7 +12,7 @@ import graft.marine.{Channels, Derived, Marine, Nmea, Races}
 object NmeaFixture {
 
   def checksum(body: String): String =
-    f"${body.getBytes("ASCII").foldLeft(0)((a, b) => a ^ b)}%02X"
+    f"${body.getBytes("UTF-8").foldLeft(0)((a, b) => a ^ (b & 0xff))}%02X"
 
   /** "$" + body + "*hh" with a correct checksum. */
   def sentence(body: String): String = s"$$$body*${checksum(body)}"
@@ -136,6 +136,21 @@ class MarineSpec extends SparkSpec {
       assert(r.getDouble(r.fieldIndex("max_sog")) <= 6.5)
       assert(r.getLong(r.fieldIndex("n_maneuvers")) >= 0)
     }
+  }
+
+  test("race stats count each race's maneuvers in the one pass over its input") {
+    val races = Races.split(Marine.wideTable(parsed))
+    val stats = Races.stats(races)
+    val counted = stats.select("race_id", "n_maneuvers").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val detected = Races.maneuvers(races).groupBy("race_id").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // race 1 flips its AWA side once; race 2 never does
+    assert(counted == Map(1L -> detected(1L), 2L -> 0L))
+    assert(!detected.contains(2L))
+    val plan = finalPlanSection(finalizedPlan(stats))
+    assert("FileScan".r.findAllMatchIn(plan).size == 1, plan)
+    assert(!plan.contains("Join"), plan)
   }
 
   test("replay export: nested docs with ordered sample arrays, json-writable") {
