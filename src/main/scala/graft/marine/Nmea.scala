@@ -1,12 +1,7 @@
 package graft.marine
 
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnShim, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BooleanType, DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
 
 /** NMEA-0183 ingest: line-oriented text → validated, typed sentence rows
   * (SURVEY.md §2.10). Grammar per the public NMEA-0183 standard:
@@ -30,10 +25,21 @@ object Nmea {
   /** Like `parse` but keeps invalid rows with valid=false for auditing. */
   def parseAll(lines: DataFrame): DataFrame = {
     val line = trim(col("value"))
+    // accept standard 5-char addresses AND proprietary/other lengths
+    // ($PMTK001-style) — validity is the checksum, not the address width
+    val wellFormed = line.rlike("^\\$[A-Z0-9]{3,10},[^*]*\\*[0-9A-Fa-f]{2}$")
+    val body = regexp_extract(line, "^\\$([^*]*)\\*", 1)
+    val declared = upper(regexp_extract(line, "\\*([0-9A-Fa-f]{2})$", 1))
+    // XOR-fold the body's characters: ascii() is a code point, so this is
+    // the byte XOR on ASCII bodies only. ArrayAggregate is
+    // CodegenFallback, so the fold runs interpreted.
+    val computed = upper(lpad(conv(
+      aggregate(split(body, ""), lit(0), (acc, c) => acc.bitwiseXOR(ascii(c)))
+        .cast("string"), 10, 16), 2, "0"))
     val extra = lines.columns.filterNot(_ == "value").map(col).toSeq
     lines
       .select(extra :+ line.as("raw") :+
-        GraftColumnShim.column(NmeaValid(GraftColumnShim.expression(line))).as("valid") :+
+        wellFormed.and(declared === computed).as("valid") :+
         substring(line, 2, 2).as("talker") :+
         substring(line, 4, 3).as("stype") :+
         split(regexp_extract(line, "^\\$[A-Z0-9]{3,10},([^*]*)\\*", 1), ",").as("fields"): _*)
@@ -145,75 +151,4 @@ object Nmea {
   /** Convenience: read a log file and parse in one call. */
   def readLog(spark: SparkSession, path: String): DataFrame =
     parse(spark.read.text(path))
-}
-
-/** NMEA-0183 sentence validity of a trimmed line, in one compiled byte
-  * loop: `$`, a 3–10 character `[A-Z0-9]` address (standard 5-character
-  * and proprietary `$PMTK001`-style alike), `,`, a body with no second
-  * `*`, then `*` and two hex digits of either case that must equal the
-  * XOR of every byte between `$` and `*`.
-  *
-  * Why an expression of its own: as column functions the check needs an
-  * `rlike`, two `regexp_extract` calls and an XOR fold,
-  * `aggregate(split(body, ""), …)`, which builds an array of
-  * one-character strings per line and, `ArrayAggregate` being
-  * `CodegenFallback`, runs its lambda interpreted. This loop allocates
-  * nothing and compiles into the scan's whole-stage code; eval and
-  * generated code both call `NmeaValid.valid`. MarinePropertySpec keeps
-  * the column form as the loop's oracle.
-  *
-  * The fold is over UTF-8 bytes, as the grammar defines; on ASCII lines
-  * that equals a fold over characters. A line that still ends in a line
-  * terminator fails (`spark.read.text` strips them).
-  */
-private[marine] case class NmeaValid(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case _: StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string argument, got $t")
-  }
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "nmea_valid"
-
-  override def nullSafeEval(line: Any): Any = NmeaValid.valid(line.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"${classOf[NmeaValid].getName}.valid($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): NmeaValid =
-    copy(child = newChild)
-}
-
-private[marine] object NmeaValid {
-
-  private def hex(b: Byte): Int =
-    if (b >= '0' && b <= '9') b - '0'
-    else if (b >= 'A' && b <= 'F') b - 'A' + 10
-    else if (b >= 'a' && b <= 'f') b - 'a' + 10
-    else -1
-
-  private def addressByte(b: Byte): Boolean =
-    (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9')
-
-  def valid(line: UTF8String): Boolean = {
-    val n = line.numBytes
-    val star = n - 3 // "*hh" closes the sentence; the shortest is "$ABC,*hh"
-    if (n < 8 || line.getByte(0) != '$' || line.getByte(star) != '*') return false
-    val hi = hex(line.getByte(n - 2))
-    val lo = hex(line.getByte(n - 1))
-    if (hi < 0 || lo < 0) return false
-    var i = 1
-    while (i < star && addressByte(line.getByte(i))) i += 1
-    if (i < 4 || i > 11 || line.getByte(i) != ',') return false
-    var sum = 0
-    i = 1
-    while (i < star) {
-      val b = line.getByte(i)
-      if (b == '*') return false
-      sum ^= b
-      i += 1
-    }
-    (sum & 0xff) == (hi << 4 | lo)
-  }
 }

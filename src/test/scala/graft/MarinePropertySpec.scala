@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.marine.{Derived, Nmea}
 
@@ -29,108 +28,6 @@ class MarinePropertySpec extends SparkSpec {
     val parsed = Nmea.parseAll(
       lines.toDF("value").withColumn("line_no", monotonically_increasing_id()))
     assert(parsed.filter(col("valid")).count() == bodies.length)
-  }
-
-  /** The column form the sentence-validity kernel replaced: a grammar
-    * regex plus an interpreted per-character XOR fold. Kept as the
-    * kernel's oracle on ASCII lines. */
-  private def regexValid(line: Column): Column = {
-    val wellFormed = line.rlike("^\\$[A-Z0-9]{3,10},[^*]*\\*[0-9A-Fa-f]{2}$")
-    val body = regexp_extract(line, "^\\$([^*]*)\\*", 1)
-    val declared = upper(regexp_extract(line, "\\*([0-9A-Fa-f]{2})$", 1))
-    val computed = upper(lpad(conv(
-      aggregate(split(body, ""), lit(0), (acc, c) => acc.bitwiseXOR(ascii(c)))
-        .cast("string"), 10, 16), 2, "0"))
-    wellFormed.and(declared === computed)
-  }
-
-  test("validity kernel agrees with the regex + fold oracle on ASCII lines") {
-    val rnd = new scala.util.Random(11)
-    val addrChars = ('A' to 'Z') ++ ('0' to '9')
-    // printable ASCII without '*', so only the cases below plant one
-    val fieldChars = (' ' to '~').filterNot(_ == '*')
-    def addr(n: Int) = Seq.fill(n)(addrChars(rnd.nextInt(addrChars.length))).mkString
-    def fields = Seq.fill(1 + rnd.nextInt(6))(
-      Seq.fill(rnd.nextInt(8))(fieldChars(rnd.nextInt(fieldChars.length))).mkString).mkString(",")
-    def body(n: Int = 5) = s"${addr(n)},$fields"
-    def xorHex(b: String) = NmeaFixture.checksum(b)
-    val cases: Seq[(String, Option[Boolean], Seq[String])] = Seq(
-      ("good", Some(true), Seq.fill(40)(NmeaFixture.sentence(body()))),
-      ("lowercase hex", Some(true),
-        Seq.fill(40) { val b = body(); s"$$$b*${xorHex(b).toLowerCase}" }),
-      ("address 2", Some(false), Seq.fill(20)(NmeaFixture.sentence(body(2)))),
-      ("address 3", Some(true), Seq.fill(20)(NmeaFixture.sentence(body(3)))),
-      ("address 10", Some(true), Seq.fill(20)(NmeaFixture.sentence(body(10)))),
-      ("address 11", Some(false), Seq.fill(20)(NmeaFixture.sentence(body(11)))),
-      ("second *", Some(false), Seq.fill(20) {
-        val b = body(); val k = 6 + rnd.nextInt(b.length - 5)
-        NmeaFixture.sentence(b.take(k) + "*" + b.drop(k))
-      }),
-      ("missing ,", Some(false), Seq.fill(20)(NmeaFixture.sentence(addr(5) + ";" + fields))),
-      ("one hex digit", Some(false),
-        Seq.fill(20) { val b = body(); s"$$$b*${xorHex(b).take(1)}" }),
-      ("bad checksum", Some(false), Seq.fill(20) {
-        val b = body(); val x = Integer.parseInt(xorHex(b), 16) ^ (1 + rnd.nextInt(255))
-        f"$$$b*$x%02X"
-      }),
-      ("trailing spaces", Some(true),
-        Seq.fill(20)(NmeaFixture.sentence(body()) + " " * (1 + rnd.nextInt(3)))),
-      ("empty and bare $", Some(false), Seq("", "$", " $ ")),
-      // one random character dropped, duplicated or replaced: either verdict
-      ("mutated", None, Seq.fill(200) {
-        val l = NmeaFixture.sentence(body()); val k = rnd.nextInt(l.length)
-        val c = (' ' to '~')(rnd.nextInt(95))
-        rnd.nextInt(3) match {
-          case 0 => l.patch(k, "", 1)
-          case 1 => l.patch(k, l.substring(k, k + 1) * 2, 1)
-          case _ => l.patch(k, c.toString, 1)
-        }
-      }))
-    val lines = cases.flatMap { case (name, _, ls) => ls.map(name -> _) }
-    val path = java.nio.file.Files.createTempFile("nmea-kernel", ".nmea")
-    java.nio.file.Files.write(path, lines.map(_._2).mkString("\n").getBytes("UTF-8"))
-    import spark.implicits._
-    // a file scan runs the generated code; a local relation is folded
-    // by the optimizer through interpreted eval
-    val fromFile = spark.read.text(path.toString)
-      .withColumn("line_no", monotonically_increasing_id())
-    val local = lines.map(_._2).zipWithIndex.map { case (l, i) => (l, i.toLong) }
-      .toDF("value", "line_no")
-    Seq(fromFile, local).foreach { input =>
-      val got = Nmea.parseAll(input)
-        .select(col("line_no"), col("valid"), regexValid(col("raw")).as("oracle"))
-        .orderBy("line_no").collect()
-      assert(got.length == lines.length)
-      got.zip(lines).foreach { case (r, (name, line)) =>
-        assert(r.getBoolean(1) == r.getBoolean(2), s"$name: '$line'")
-        cases.find(_._1 == name).get._2.foreach(want =>
-          assert(r.getBoolean(1) == want, s"$name: '$line'"))
-      }
-      val mutated = got.zip(lines).filter(_._2._1 == "mutated").map(_._1.getBoolean(1))
-      assert(mutated.contains(true) && mutated.contains(false))
-    }
-  }
-
-  test("parseAll's plan has no interpreted expression") {
-    // a file scan: a local relation would be folded away before planning
-    val path = java.nio.file.Files.createTempFile("nmea-plan", ".nmea")
-    java.nio.file.Files.write(path, NmeaFixture.sentence("IIDPT,12.7,0.0").getBytes("UTF-8"))
-    val plan = Nmea.parseAll(spark.read.text(path.toString)).queryExecution.optimizedPlan
-    val interpreted = plan.flatMap(_.expressions).flatMap(_.collect {
-      case e: org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback => e
-      case e: org.apache.spark.sql.catalyst.expressions.RLike => e
-    })
-    assert(interpreted.isEmpty, plan.toString)
-  }
-
-  test("validity kernel XORs UTF-8 bytes on a non-ASCII body") {
-    import spark.implicits._
-    // bytes of "GPTXT,01,01,02,Café" fold to 0x63; its code points to 0xE0
-    assert(NmeaFixture.checksum("GPTXT,01,01,02,Café") == "63")
-    val got = Nmea.parseAll(Seq(
-      "$GPTXT,01,01,02,Café*63", "$GPTXT,01,01,02,Café*E0").toDF("value"))
-      .select("valid").collect().map(_.getBoolean(0))
-    assert(got.sameElements(Array(true, false)))
   }
 
   test("apparent→true→apparent wind round-trip") {

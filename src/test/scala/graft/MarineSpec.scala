@@ -12,7 +12,7 @@ import graft.marine.{Channels, Derived, Marine, Nmea, Races}
 object NmeaFixture {
 
   def checksum(body: String): String =
-    f"${body.getBytes("UTF-8").foldLeft(0)((a, b) => a ^ (b & 0xff))}%02X"
+    f"${body.getBytes("ASCII").foldLeft(0)((a, b) => a ^ b)}%02X"
 
   /** "$" + body + "*hh" with a correct checksum. */
   def sentence(body: String): String = s"$$$body*${checksum(body)}"
