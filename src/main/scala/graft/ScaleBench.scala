@@ -522,20 +522,14 @@ object ScaleBench {
       // list: this corpus is so duplicated that pairs are quadratic
       // (2× corpus → 11M pairs from 10k docs; 10× would be ~300M)
       // r16 (verdict item 4): the components loop's edges-shuffle-once
-      // claim, measured on a DEEP synthetic graph (62.5k chains × 17
+      // shape, measured on a DEEP synthetic graph (62.5k chains × 17
       // nodes → 1M edges, diameter 16 → the loop runs ~5 pointer-jump
-      // rounds, not the fixture's 2). A/B: prePartitionEdges=false is
-      // the pre-r15 shape whose neighbor-min join re-shuffles the edge
-      // table EVERY round; compare shuffle_written (rounds × edge bytes
-      // vs O(1) in rounds) and wall. dedupEdges=false as at both
-      // product call sites (strict a<b unique edges).
+      // rounds, not the fixture's 2); shuffle_written stays O(1) in
+      // rounds. dedupEdges=false as at both product call sites (strict
+      // a<b unique edges).
       t("cc_chain_1m_edges_prepart") {
         pipeline.Dedup.clusters(chainPairs, "a_id", "b_id",
           dedupEdges = false).count()
-      },
-      t("cc_chain_1m_edges_noprepart") {
-        pipeline.Dedup.clusters(chainPairs, "a_id", "b_id",
-          dedupEdges = false, prePartitionEdges = false).count()
       },
       t("lsh_clusters_50k_docs") {
         pipeline.Dedup.lshClusters(documents, "doc_id", "text").count()

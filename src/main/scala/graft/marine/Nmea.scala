@@ -8,9 +8,19 @@ import org.apache.spark.sql.functions._
   * `$TTSSS,f1,f2,…*hh` where hh is the XOR of all bytes between `$` and
   * `*` in hex.
   *
-  * Everything is column expressions over `spark.read.text` — the parse
-  * runs inside whole-stage codegen, one pass, no UDFs; at 100 TB of logs
-  * this is a pure map stage that scales linearly with input splits.
+  * Known gaps, both in `parseAll`'s checksum (ROADMAP D5 step 2 holds
+  * the fix, a codegen'd byte-XOR expression):
+  *  - the fold XORs code points, not UTF-8 bytes, so a sentence with a
+  *    non-ASCII body is judged against the wrong checksum
+  *    (`$GPTXT,01,01,02,Café*63`, the byte XOR, is rejected; `*E0` is
+  *    accepted);
+  *  - the fold is `ArrayAggregate`, a `CodegenFallback`, so it runs
+  *    interpreted over a per-line array of one-character strings, and
+  *    the rest of the parse is codegen'd around it.
+  *
+  * The parse is column expressions over `spark.read.text`, one pass and
+  * no UDFs; at 100 TB of logs it is a pure map stage that scales
+  * linearly with input splits.
   */
 object Nmea {
 

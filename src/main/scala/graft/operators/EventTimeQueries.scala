@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryPack, Tables}
 
-/** SURVEY.md §2.8 — event-time operators, batch-verified. The streaming
-  * twins (withWatermark + window/session_window over readStream) live in
-  * graft.streaming; the oracle checks the batch semantics here.
+/** SURVEY.md §2.8 — event-time operators, batch-verified; the oracle
+  * checks the batch semantics here. Only `evt_drift_psi` has a streaming
+  * form (`graft.streaming.DriftStream`); the others are batch-only.
   *
   * Window starts are emitted as epoch SECONDS (BIGINT): events.ts is ns in
   * parquet and Spark reads µs, so any raw-timestamp emit would drift

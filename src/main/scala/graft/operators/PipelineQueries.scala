@@ -7,8 +7,9 @@ import graft.{QueryPack, Tables}
 /** SURVEY.md §2.9 — LLM-training-data pipeline operators over the
   * `documents` and `embeddings` tables: dedup, similarity search, text
   * analysis. The oracle-checked forms here are the exact variants; the
-  * sketch/LSH scale twins live in `graft.pipeline` (non-oracle, tested by
-  * scalatest) because sketches can never hash-match a different engine.
+  * MinHash/LSH scale twins live in `graft.pipeline` (non-oracle, tested
+  * by scalatest) because approximate results can never hash-match a
+  * different engine.
   *
   * Float determinism: all vector math is done in DOUBLE with an explicit
   * left-fold (`aggregate` in Spark, `list_reduce` in DuckDB) so both

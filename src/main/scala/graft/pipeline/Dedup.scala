@@ -294,16 +294,11 @@ object Dedup {
     * @return (id, cluster_id) where cluster_id = min id in the component
     */
   def clusters(pairs: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
-               maxIter: Int = 50, dedupEdges: Boolean = true,
-               prePartitionEdges: Boolean = true): DataFrame = {
-    // prePartitionEdges is the r15 edges-shuffle-once lever, exposed as
-    // a parameter ONLY so ScaleBench can A/B it honestly (false =
-    // the pre-r15 shape where every round re-shuffles the edge table
-    // into its neighbor-min join); every product call site keeps the
-    // default. SPARK_GRAFT_CC_PLAN=true additionally prints each
-    // round's EXECUTED plan to stderr — the committed evidence
-    // (plans/r16) that the edges side of the neighbor-min join carries
-    // no Exchange: the checkpoint preserves hash(dst) partitioning.
+               maxIter: Int = 50, dedupEdges: Boolean = true): DataFrame = {
+    // SPARK_GRAFT_CC_PLAN=true prints each round's EXECUTED plan to
+    // stderr — the committed evidence (plans/r16) that the edges side
+    // of the neighbor-min join carries no Exchange: the checkpoint
+    // preserves hash(dst) partitioning.
     val directed = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
     // eager: edges is the expensive subtree (the caller's whole pair
@@ -346,18 +341,17 @@ object Dedup {
     // chain ScaleBench graph ~9, a cluster corpus the full width.
     val sess = pairs.sparkSession
     val shufflePartitions = sess.sessionState.conf.numShufflePartitions
-    val edges = if (prePartitionEdges) {
-      val observed = deduped.observe("cc_edges", count(lit(1)).as("n"))
-      val raw = observed.localCheckpoint(true)
-      val n = observed.queryExecution.observedMetrics.get("cc_edges")
-        .map(_.getAs[Long]("n")).getOrElse(raw.count())
-      val width = math.max(1L,
-        math.min(shufflePartitions.toLong, n / 262144L + 1L)).toInt
-      val saved = sess.conf.get("spark.sql.adaptive.enabled", "true")
-      sess.conf.set("spark.sql.adaptive.enabled", "false")
+    val observed = deduped.observe("cc_edges", count(lit(1)).as("n"))
+    val raw = observed.localCheckpoint(true)
+    val n = observed.queryExecution.observedMetrics.get("cc_edges")
+      .map(_.getAs[Long]("n")).getOrElse(raw.count())
+    val width = math.max(1L,
+      math.min(shufflePartitions.toLong, n / 262144L + 1L)).toInt
+    val saved = sess.conf.get("spark.sql.adaptive.enabled", "true")
+    sess.conf.set("spark.sql.adaptive.enabled", "false")
+    val edges =
       try raw.repartition(width, col("dst")).localCheckpoint(true)
       finally sess.conf.set("spark.sql.adaptive.enabled", saved)
-    } else deduped.localCheckpoint(true)
     // seed with the first neighbor-min round folded into initialization:
     // label(x) = min(x, neighbors(x)) — one aggregate instead of an
     // identity round, saving a full iteration on every graph

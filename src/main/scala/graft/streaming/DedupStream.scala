@@ -56,7 +56,9 @@ case class BucketDoc(bucket: Long, doc_id: Long, ts: Timestamp, text: String)
   * continuous-crawl shape: there is no batch/corpus boundary, the corpus
   * IS the stream's past.
   *
-  * Mechanics (the AsofStream/RetentionStream discipline):
+  * Mechanics (buffer until the watermark seals, then process in
+  * event-time order, so the output cannot depend on how rows were
+  * split into micro-batches):
   *  - each doc fans out to its `bands` LSH band buckets
   *    (`flatMap` before the keyed state), so candidate generation is
   *    per-bucket co-occurrence — never doc × history;
@@ -165,11 +167,10 @@ object DedupStream {
               watermark: String = "10 minutes"): Dataset[BucketMatch] =
     matchesImpl(docs, threshold, k, bands, watermark, ttlMs = None)
 
-  /** The candidate stream WITH A STATE LIFECYCLE (round-9, the natural
-    * third application of the shared event-time TTL after
-    * DigestStream/HeavyHittersStream): the LSH index is the operator
-    * whose state is genuinely unbounded — distinct texts × bands,
-    * forever. Here an entry is evicted once its text has been IDLE for
+  /** The candidate stream WITH A STATE LIFECYCLE (round-9, the shared
+    * event-time TTL that `DigestStream.digestsWithTtl` also uses): the
+    * LSH index is the operator whose state is genuinely unbounded —
+    * distinct texts × bands, forever. Here an entry is evicted once its text has been IDLE for
     * `ttl` of event time (no verbatim copy seen — `lastTs`, the max
     * copy time, is the clock base, so the collapse never shortens a
     * text's life). State is then bounded by texts ACTIVE inside the

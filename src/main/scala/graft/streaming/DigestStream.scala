@@ -28,8 +28,8 @@ case class DigestTtlState(counts: Map[String, Long], maxTsMs: Long)
 case class UserDigestUpdate(user_id: Long, digest: String, evicted: Boolean)
 
 /** Shared event-time TTL parsing for the lifecycle'd stateful operators
-  * (DigestStream.digestsWithTtl, HeavyHittersStream.heavyHittersWithTtl):
-  * one interval grammar, one months-are-ambiguous rejection.
+  * (DigestStream.digestsWithTtl, DedupStream.matchesWithTtl): one
+  * interval grammar, one months-are-ambiguous rejection.
   */
 private[streaming] object EventTimeTtl {
   def millis(ttl: String): Long = {
@@ -51,11 +51,11 @@ case class UserDigest(user_id: Long, digest: String)
 /** Streaming twin of the `nested_event_digest` batch key (SURVEY.md
   * §2.7): a continuously-maintained per-user event digest — the export
   * row a live dashboard or feature store reads. Running totals are
-  * order-insensitive (counts commute), so unlike the event-time twins
-  * this needs no watermark: state is one small map per user (bounded by
-  * event-type cardinality, the same bound as the batch digest), updated
-  * per micro-batch with `mapGroupsWithState` in Update mode, emitting
-  * the user's refreshed digest row.
+  * order-insensitive (counts commute), so unlike DedupStream and
+  * DriftStream this needs no watermark: state is one small map per
+  * user (bounded by event-type cardinality, the same bound as the
+  * batch digest), updated per micro-batch with `mapGroupsWithState` in
+  * Update mode, emitting the user's refreshed digest row.
   *
   * The emitted JSON is byte-identical to the batch key's
   * `to_json(array_sort(collect_list(struct(event_type, cnt))))` — the

@@ -4,6 +4,10 @@ import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
+/** A typed row of the `events` table, the input of [[DriftStream]]. */
+case class StreamEvent(event_id: Long, ts: java.sql.Timestamp,
+                       user_id: Long, event_type: String, value: Double)
+
 /** One finalized drift report row: a tumbling window's count in one
   * value bin, that bin's Laplace-smoothed PSI term against the
   * reference distribution, and the window's total PSI (repeated on each

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.pipeline.{Dedup, Multimodal, Similarity, Sketches}
+import graft.pipeline.{Dedup, Multimodal, Similarity}
 
 class PipelineLibSpec extends SparkSpec {
 
@@ -265,17 +265,5 @@ class PipelineLibSpec extends SparkSpec {
     val frames = Multimodal.sampleFrames(media, frameBytes = 16, everyNth = 2)
     assert(frames.count() > 0)
     assert(frames.columns.toSeq == Seq("media_id", "frame_no", "frame"))
-  }
-
-  test("Sketches.approxDistinct is within rsd of exact") {
-    val approx = Sketches.approxDistinct(
-      Tables.lineitem(spark, sf), Seq("l_returnflag"), "l_partkey")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = Tables.lineitem(spark, sf)
-      .groupBy("l_returnflag").agg(countDistinct("l_partkey").as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    exact.foreach { case (k, n) =>
-      assert(math.abs(approx(k) - n).toDouble / n < 0.05)
-    }
   }
 }

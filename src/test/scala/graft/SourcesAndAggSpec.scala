@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
-import graft.functions.VectorAvg
 import graft.pipeline.Skew
 import graft.sources.Sources
 
@@ -96,27 +95,6 @@ class SourcesAndAggSpec extends SparkSpec {
     val df = Sources.readBinaryFiles(spark, dir.toString, "*.bin")
     val rows = df.select("length", "content").collect()
     assert(rows.map(_.getLong(0)).sorted.sameElements(Array(2L, 3L)))
-  }
-
-  test("VectorAvg aggregator computes per-label centroids like the relational path") {
-    import spark.implicits._
-    val byAgg = Tables.embeddings(spark, sf)
-      .select(col("label"), col("embedding"))
-      .as[(Int, Array[Float])]
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(VectorAvg.toColumn.name("centroid"))
-      .collect().toMap
-    // compare against the posexplode-based relational centroid
-    val relational = graft.pipeline.Similarity
-      .labelCentroids(Tables.embeddings(spark, sf))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1).toArray).toMap
-    assert(byAgg.keySet == relational.keySet)
-    byAgg.foreach { case (label, c) =>
-      val rc = relational(label)
-      assert(c.length == rc.length)
-      c.zip(rc).foreach { case (x, y) => assert(math.abs(x - y) < 1e-9) }
-    }
   }
 
   test("salted aggregation matches the direct groupBy on a skewed column") {
