@@ -225,16 +225,3 @@ class GraftExactExtensions extends (org.apache.spark.sql.SparkSessionExtensions 
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
   }
 }
-
-/** Full extension: everything in GraftExactExtensions plus ALGEBRAIC
-  * rewrites (SimplifySelfCosine) whose floating results can differ in
-  * the last ulp from the unoptimized plan. Use in deployments that
-  * favor speed over bit-replay; never in Verify/Bench sessions
-  * (SURVEY.md §8 invariant 3).
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    new GraftExactExtensions().apply(ext)
-    ext.injectOptimizerRule(_ => SimplifySelfCosine)
-  }
-}

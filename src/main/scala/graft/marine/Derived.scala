@@ -47,9 +47,6 @@ object Derived {
     lit(2.0 * 6371008.8) * asin(sqrt(a))
   }
 
-  /** Knots → meters/second. */
-  def knToMs(kn: Column): Column = kn * lit(0.514444)
-
   /** A boat polar: target boat speed (kn) on a (TWS, |TWA|) grid.
     * `targets(i)(j)` pairs with `twsLevels(i)` × `twaLevels(j)`; both
     * level axes must be strictly increasing. The default is a generic

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** End-to-end marine pipeline (SURVEY.md §2.10): raw NMEA log → typed
+/** End-to-end marine pipeline (SURVEY.md §2.10): raw NMEA log → validated
   * sentences → clocked long-form channels → aligned wide table → derived
   * wind/VMG → races/maneuvers/stats → replay JSON.
   *
@@ -52,8 +52,12 @@ object Marine {
   }
 
   /** Full wide table: clocked long-form channels → aligned + derived
-    * true wind and VMG, one row per clock tick. Single-log form
-    * (one totally-ordered sequence → unpartitioned windows).
+    * true wind and VMG, one row per clock tick. Single-log form: one log
+    * is one totally-ordered sequence, so its windows are UNPARTITIONED
+    * and serialise the log through one task by construction — correct
+    * for one boat-day, NOT the fleet-scale path. At scale use
+    * [[wideTableByKey]], whose Exchange hashes on the boat key so each
+    * boat's log aligns independently in parallel.
     */
   def wideTable(parsed: DataFrame): DataFrame =
     wideTableImpl(parsed, keys = Nil)

@@ -1,12 +1,13 @@
 package graft.marine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** NMEA-0183 ingest: line-oriented text → validated, typed sentence rows
-  * (SURVEY.md §2.10). Grammar per the public NMEA-0183 standard:
-  * `$TTSSS,f1,f2,…*hh` where hh is the XOR of all bytes between `$` and
-  * `*` in hex.
+/** NMEA-0183 ingest: line-oriented text → validated sentence rows
+  * (talker, type, field array; SURVEY.md §2.10). `Marine.wideTable`
+  * decodes the fields by position. Grammar per the public NMEA-0183
+  * standard: `$TTSSS,f1,f2,…*hh` where hh is the XOR of all bytes
+  * between `$` and `*` in hex.
   *
   * Known gaps, both in `parseAll`'s checksum (ROADMAP D5 step 2 holds
   * the fix, a codegen'd byte-XOR expression):
@@ -64,101 +65,9 @@ object Nmea {
     when(hemi.isin("S", "W"), -deg).otherwise(deg)
   }
 
-  private def f(i: Int): Column = element_at(col("fields"), i)
-
-  /** RMC — recommended minimum: UTC time, status, position, SOG, COG,
-    * date. utc is emitted as seconds-since-midnight (double) plus a full
-    * timestamp assembled from the ddmmyy date field.
-    */
-  def rmc(parsed: DataFrame): DataFrame =
-    parsed.filter(col("stype") === "RMC")
-      .select(
-        col("raw"),
-        utcSeconds(f(1)).as("utc_s"),
-        to_timestamp(
-          concat(lit("20"), substring(f(9), 5, 2), lit("-"),
-            substring(f(9), 3, 2), lit("-"), substring(f(9), 1, 2),
-            lit(" "), substring(f(1), 1, 2), lit(":"), substring(f(1), 3, 2),
-            lit(":"), substring(f(1), 5, 2))).as("ts"),
-        (f(2) === "A").as("active"),
-        coord(f(3), f(4)).as("lat"),
-        coord(f(5), f(6)).as("lon"),
-        f(7).cast("double").as("sog_kn"),
-        f(8).cast("double").as("cog_deg"))
-
-  /** GGA — fix data: position, fix quality, satellite count, HDOP,
-    * altitude.
-    */
-  def gga(parsed: DataFrame): DataFrame =
-    parsed.filter(col("stype") === "GGA")
-      .select(
-        col("raw"),
-        utcSeconds(f(1)).as("utc_s"),
-        coord(f(2), f(3)).as("lat"),
-        coord(f(4), f(5)).as("lon"),
-        f(6).cast("int").as("fix_quality"),
-        f(7).cast("int").as("n_sats"),
-        f(8).cast("double").as("hdop"),
-        f(9).cast("double").as("alt_m"))
-
-  /** VHW — water speed and heading. */
-  def vhw(parsed: DataFrame): DataFrame =
-    parsed.filter(col("stype") === "VHW")
-      .select(
-        col("raw"),
-        f(1).cast("double").as("hdg_true"),
-        f(3).cast("double").as("hdg_mag"),
-        f(5).cast("double").as("stw_kn"),
-        f(7).cast("double").as("stw_kmh"))
-
-  /** MWV — wind speed and angle (R = apparent/relative, T = true). */
-  def mwv(parsed: DataFrame): DataFrame =
-    parsed.filter(col("stype") === "MWV")
-      .select(
-        col("raw"),
-        f(1).cast("double").as("wind_angle"),
-        f(2).as("reference"),
-        f(3).cast("double").as("wind_speed"),
-        f(4).as("unit"),
-        (f(5) === "A").as("valid_flag"))
-
-  /** VWR — relative wind (older alternative to MWV): angle 0-180 +
-    * L/R side, speed in knots/m-s/km-h. Normalised to the MWV shape:
-    * signed wind_angle (starboard positive).
-    */
-  def vwr(parsed: DataFrame): DataFrame =
-    parsed.filter(col("stype") === "VWR")
-      .select(
-        col("raw"),
-        when(f(2) === "L", -f(1).cast("double"))
-          .otherwise(f(1).cast("double")).as("wind_angle"),
-        f(3).cast("double").as("wind_speed_kn"),
-        f(5).cast("double").as("wind_speed_ms"),
-        f(7).cast("double").as("wind_speed_kmh"))
-
-  /** DPT — depth below transducer + offset. */
-  def dpt(parsed: DataFrame): DataFrame =
-    parsed.filter(col("stype") === "DPT")
-      .select(
-        col("raw"),
-        f(1).cast("double").as("depth_m"),
-        f(2).cast("double").as("offset_m"))
-
-  /** HDG — magnetic heading, deviation, variation (E positive). */
-  def hdg(parsed: DataFrame): DataFrame =
-    parsed.filter(col("stype") === "HDG")
-      .select(
-        col("raw"),
-        f(1).cast("double").as("hdg_mag"),
-        when(f(5) === "W", -f(4).cast("double")).otherwise(f(4).cast("double")).as("variation"))
-
   /** hhmmss.ss → seconds since midnight UTC. */
   def utcSeconds(utc: Column): Column =
     substring(utc, 1, 2).cast("double") * 3600 +
       substring(utc, 3, 2).cast("double") * 60 +
       substring(utc, 5, 10).cast("double")
-
-  /** Convenience: read a log file and parse in one call. */
-  def readLog(spark: SparkSession, path: String): DataFrame =
-    parse(spark.read.text(path))
 }

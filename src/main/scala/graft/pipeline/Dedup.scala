@@ -44,30 +44,13 @@ object Dedup {
     * hash → array_min. No explode, no extra shuffle.
     */
   def minhashSignature(textCol: Column, k: Int): Column = {
-    // matches MinHashAgg fed with filtered tokens
+    // component `seed` = min over the doc's distinct non-empty tokens of
+    // xxhash64(token, seed); every component is null for a doc with no tokens
     val tokens = tokensOf(textCol)
     val sig = (0 until k).map { seed =>
       array_min(transform(tokens, t => xxhash64(t, lit(seed))))
     }
     array(sig: _*)
-  }
-
-  /** Bottom-k sketch (Broder 1997): the k smallest token hashes,
-    * ascending, MaxValue-padded. ONE hash per token; good for pairwise
-    * Jaccard ESTIMATION (|bottom-k(A) ∩ bottom-k(B)| / k over the union
-    * sketch).
-    *
-    * NOT an input for positional LSH banding: inserting one token whose
-    * hash lands low shifts every later position, so a Jaccard≈0.94 pair
-    * can share ZERO band slices (deterministically), and the MaxValue
-    * padding makes every doc with < k·(bands−1)/bands tokens share its
-    * tail bands with every other short doc. Use
-    * [[bandBucketsFast]]/the per-component schemes for banding.
-    */
-  def minhashSignatureBottomK(textCol: Column, k: Int): Column = {
-    val tokens = tokensOf(textCol)
-    val hashes = transform(tokens, t => xxhash64(t))
-    slice(concat(array_sort(hashes), array_repeat(lit(Long.MaxValue), k)), 1, k)
   }
 
   /** (doc_id, band, bucket) rows — the shared banding for every LSH
@@ -97,8 +80,9 @@ object Dedup {
   /** Fast per-component banding: ONE string hash per token, then k
     * cheap 8-byte re-hashes (`xxhash64(baseHash, component)`) — each
     * signature component stays an independent per-component minimum, so
-    * banding keeps the classic minhash collision guarantees (which the
-    * bottom-k sketch does NOT — see [[minhashSignatureBottomK]]).
+    * banding keeps the classic minhash collision guarantees (a bottom-k
+    * sketch, the k smallest hashes of one hash function, does NOT: one
+    * low-hashing token shifts every later position).
     * Built in two projections so the base hash array is materialized
     * once: CollapseProject refuses to inline a non-cheap alias
     * referenced k times, which is exactly what keeps the string hashing
@@ -223,40 +207,6 @@ object Dedup {
       .select(col("__orig_id").as("n_id"), col("dup_of"), col("jaccard"))
   }
 
-  /** 64-bit per-bit-majority SimHash. One explode on (token × bit) and
-    * two hash aggregations — at 100 TB, partial aggregation collapses the
-    * (id, bit) pairs map-side so the shuffle is ≤ 64 rows per doc.
-    * Returns (idCol, simhash BIGINT).
-    */
-  def simhash(df: DataFrame, idCol: String, textCol: String): DataFrame =
-    df.select(col(idCol), explode_outer(split(col(textCol), " ")).as("tok"))
-      .filter(col("tok") =!= "")
-      .withColumn("h", xxhash64(col("tok")))
-      .select(col(idCol), col("h"), explode_outer(sequence(lit(0), lit(63))).as("j"))
-      .withColumn("bit", expr("shiftright(h, CAST(j AS INT)) & CAST(1 AS BIGINT)"))
-      .groupBy(col(idCol), col("j"))
-      .agg(sum(when(col("bit") === 1L, 1L).otherwise(-1L)).as("s"))
-      .groupBy(col(idCol))
-      .agg(sum(when(col("s") > 0,
-        expr("shiftleft(CAST(1 AS BIGINT), CAST(j AS INT))")).otherwise(0L)).as("simhash"))
-
-  /** Hamming-distance pairs over simhash fingerprints, blocked by the
-    * top `prefixBits` bits so the pairwise comparison never goes
-    * all-against-all (near-identical docs share the high bits with
-    * probability 1 - d/64 per bit).
-    */
-  def simhashPairs(fp: DataFrame, idCol: String, maxHamming: Int,
-                   prefixBits: Int = 12): DataFrame = {
-    val blocked = fp.withColumn("block", expr(s"shiftrightunsigned(simhash, ${64 - prefixBits})"))
-    blocked.select(col(idCol).as("a_id"), col("simhash").as("fa"), col("block"))
-      .join(blocked.select(col(idCol).as("b_id"), col("simhash").as("fb"), col("block")),
-        Seq("block"))
-      .filter(col("a_id") < col("b_id"))
-      .withColumn("hamming", bit_count(col("fa").bitwiseXOR(col("fb"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("a_id"), col("b_id"), col("hamming"))
-  }
-
   /** Connected components over near-dup pairs by iterative hash-min
     * label propagation with pointer jumping: every round each node takes
     * the minimum label among itself and its neighbors, then follows its
@@ -283,6 +233,13 @@ object Dedup {
     * is free modulo the post-shuffle join recompute in B, and a
     * fixpoint seed (all-clique verbatim-copy graphs) is detected before
     * any propagation work, at no cost to chained graphs.
+    *
+    * SESSION SIDE EFFECT: the width-pinned edge checkpoint runs with
+    * `spark.sql.adaptive.enabled` set to false on the CALLER'S session
+    * (restored afterwards). A query planned concurrently on the same
+    * session in that window plans without AQE, so callers must be
+    * single-threaded on the session. ROADMAP D3 moves this checkpoint
+    * onto a `cloneSession()` to remove the mutation.
     *
     * @param pairs undirected edges (aCol, bCol)
     * @param dedupEdges distinct the directed edge list before iterating.
@@ -511,9 +468,4 @@ object Dedup {
                    signature: (Column, Int) => Column = minhashSignature): DataFrame =
     keepSurvivors(docs, idCol,
       lshClusters(docs, idCol, textCol, k, bands, signature))
-
-  /** Survivors via [[lshClustersFast]]. */
-  def lshSurvivorsFast(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 16, bands: Int = 4): DataFrame =
-    keepSurvivors(docs, idCol, lshClustersFast(docs, idCol, textCol, k, bands))
 }

@@ -77,16 +77,4 @@ object Similarity {
       .orderBy(desc("cos"), col(idCol))
       .limit(k)
   }
-
-  /** Per-label centroids without collect(): posexplode → mean per
-    * (label, pos) → re-assembled ordered array.
-    */
-  def labelCentroids(table: DataFrame, labelCol: String = "label"): DataFrame =
-    table
-      .select(col(labelCol), posexplode(col("embedding")).as(Seq("pos", "v")))
-      .groupBy(col(labelCol), col("pos"))
-      .agg(avg(col("v").cast("double")).as("m"))
-      .groupBy(col(labelCol))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pairs"))
-      .select(col(labelCol), transform(col("pairs"), p => p.getField("m")).as("centroid"))
 }

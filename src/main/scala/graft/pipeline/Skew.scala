@@ -11,18 +11,6 @@ import org.apache.spark.sql.functions._
   */
 object Skew {
 
-  /** Two-phase skewed aggregation: count per (key, salt) partials, then
-    * merge per key. The hot key's rows spread across `buckets` reducers
-    * in phase 1; phase 2 only merges `buckets` partial rows per key.
-    */
-  def saltedCount(df: DataFrame, keyCol: String, saltSrc: Column,
-                  buckets: Int = 16): DataFrame =
-    df.withColumn("__salt", pmod(hash(saltSrc), lit(buckets)))
-      .groupBy(col(keyCol), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(keyCol))
-      .agg(sum("__partial").as("n"))
-
   /** Salted join of a skewed fact against a dim: the dim side is
     * replicated `buckets`× (explode) so each salted fact partition finds
     * its match — the classic hot-key join spread. Only worth it when the

@@ -37,83 +37,6 @@ object Layout {
       .format("parquet")
       .saveAsTable(table)
 
-  /** Morton (Z-order) value over `dims` numeric columns: each value is
-    * normalized to a `bits`-bit integer over its [min, max] range
-    * (equal-width; swap in approx-quantile boundaries for equal-depth
-    * on skewed data), then the dimensions' bits are interleaved. Rows
-    * close in z-value are close in EVERY dimension, so sorting files by
-    * z-value gives each parquet file a narrow min/max envelope on every
-    * dimension at once — the property that lets range filters on any
-    * dim prune files, where a single-column sort clusters only itself.
-    *
-    * The interleave is plain shift/and/or column arithmetic (codegen
-    * stays whole-stage; the classic magic-mask spreading would shave
-    * constant factors but this form works for any (dims, bits) with
-    * dims*bits ≤ 63). Ranges are caller-supplied so one aggregate scan
-    * serves the whole write — see [[zorderWrite]].
-    */
-  def zvalue(dims: Seq[(org.apache.spark.sql.Column, Long, Long)],
-             bits: Int = 16): org.apache.spark.sql.Column = {
-    require(dims.nonEmpty && dims.size * bits <= 63,
-      s"${dims.size} dims × $bits bits must fit a signed long")
-    val stride = dims.size
-    val maxBucket = (1L << bits) - 1
-    dims.zipWithIndex.map { case ((c, lo, hi), d) =>
-      require(hi >= lo, s"dimension $d range inverted")
-      // [lo, hi] spanning more than Long.MaxValue (e.g. a Long.MinValue
-      // null-sentinel next to real values) would wrap BOTH this span
-      // and the per-row `c - lo` — silently collapsing every bucket.
-      // Refuse loudly: sentinel cleanup is the caller's job.
-      require(BigInt(hi) - BigInt(lo) <= Long.MaxValue,
-        s"dimension $d range [$lo, $hi] exceeds Long.MaxValue — strip " +
-          "sentinels or pre-normalize before z-ordering")
-      // equal-width bucket in [0, 2^bits) with a POWER-OF-TWO width, so
-      // the division is an exact shift: Column./ on longs is double
-      // division (loses exactness past 2^53 — ns-epoch territory) and a
-      // multiply-first form overflows the long. A degenerate (constant)
-      // dimension lands every row in bucket 0.
-      val span = math.max(1L, hi - lo)
-      val spanBits = 64 - java.lang.Long.numberOfLeadingZeros(span)
-      val shift = math.max(0, spanBits - bits)
-      val bucket = least(lit(maxBucket), greatest(lit(0L),
-        shiftright(c.cast("long") - lit(lo), shift)))
-      // spread bucket bits to positions d, d+stride, d+2*stride, ...
-      (0 until bits).map { i =>
-        shiftleft(shiftright(bucket, i).bitwiseAND(lit(1L)), i * stride + d)
-      }.reduce(_.bitwiseOR(_))
-    }.reduce(_.bitwiseOR(_))
-  }
-
-  /** Z-order-clustered parquet write: range-partition then sort by the
-    * Morton value so every output file covers a small hyper-rectangle
-    * of the dimension space. One aggregate computes all ranges; the
-    * write itself is one range Exchange + per-partition sort.
-    */
-  def zorderWrite(df: DataFrame, dimCols: Seq[String], path: String,
-                  bits: Int = 16, partitions: Int = 0): Unit = {
-    val aggs = dimCols.flatMap(c =>
-      Seq(min(col(c).cast("long")), max(col(c).cast("long"))))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    if (dimCols.indices.exists(i => row.isNullAt(2 * i))) {
-      // empty input, an all-null dim, or a non-castable dim: there is
-      // nothing to cluster on — write as-is instead of throwing an
-      // opaque NPE where a plain write would have succeeded
-      df.write.mode(SaveMode.Overwrite).parquet(path)
-      return
-    }
-    val ranges = dimCols.indices.map(i => (row.getLong(2 * i), row.getLong(2 * i + 1)))
-    val dims = dimCols.zip(ranges).map { case (c, (lo, hi)) => (col(c), lo, hi) }
-    // grows-until-fresh: never silently replace (and then drop) a real
-    // user column that happens to be named like our sort key
-    val zCol = Iterator.iterate("__z")(_ + "_").dropWhile(df.columns.contains).next()
-    val withZ = df.withColumn(zCol, zvalue(dims, bits))
-    val shaped =
-      if (partitions > 0) withZ.repartitionByRange(partitions, col(zCol))
-      else withZ.repartitionByRange(col(zCol))
-    shaped.sortWithinPartitions(zCol).drop(zCol)
-      .write.mode(SaveMode.Overwrite).parquet(path)
-  }
-
   /** MERGE (upsert) relation — SQL MERGE semantics as one declarative
     * plan: apply a CHANGES table to a TARGET by key.
     *  - WHEN MATCHED THEN UPDATE SET * (the change row replaces the
@@ -143,10 +66,9 @@ object Layout {
     * Plan shape at 100 TB: ONE equi-join on the key — the planner
     * broadcasts the typical small change set, else it shuffles both
     * sides on the key. Plain parquet has no row-level update, so
-    * persisting the merge means rewriting FILES — full-table via this
-    * relation + write, or partition-scoped via [[mergeDatePartitioned]]
-    * (only partitions holding changed keys are rewritten). Atomic
-    * commit/time-travel needs a table format (Iceberg/Delta — the
+    * persisting the merge means rewriting FILES: this relation plus a
+    * write to a fresh directory, repointed by [[publishDirectory]].
+    * Atomic commit/time-travel needs a table format (Iceberg/Delta — the
     * documented delegation; this zero-egress image cannot ship one).
     */
   def merged(target: DataFrame, changes: DataFrame, keys: Seq[String],
@@ -193,203 +115,23 @@ object Layout {
     }: _*)
   }
 
-  /** Partition-scoped MERGE into a [[writeDatePartitioned]] layout: only
-    * the partitions that appear in the CHANGES set are read, merged
-    * ([[merged]]) and rewritten — at 100 TB a 1% daily change set
-    * rewrites days, not the table. Mechanics: affected partition VALUES
-    * collect to the driver (bounded by the partition count, not rows),
-    * the target read partition-prunes to them, and the merged result
-    * stages to `<path>__staging` before each partition directory is
-    * swapped in.
-    *
-    * CRASH SAFETY: before any mutation of the live tree a commit
-    * manifest (`<staging>/_MERGE_PENDING`, one `swap|drop <dir>` line
-    * per affected partition) is persisted, and each swap is
-    * RENAME-ASIDE — old partition renamed into `<path>__trash`, staged
-    * partition renamed in, nothing deleted until the manifest is
-    * retired — so a kill at ANY point loses no committed data and
-    * [[recoverMergePending]] finishes the merge mechanically (it is
-    * also invoked at the start of every merge, so an interrupted run
-    * heals on the next one). Replay is idempotent: a `swap` whose
-    * staged dir is gone already landed; a `drop` re-deletes nothing.
-    *
-    * READER VISIBILITY: plain-directory layouts cannot give snapshot
-    * isolation — a reader LISTING the table between a partition's two
-    * renames sees that partition absent (a window of two metadata ops,
-    * no longer the delete-to-rewrite gap), and a reader scanning
-    * across several partitions mid-merge can see a mixed version.
-    * Readers needing a consistent cut must read through a table
-    * format's commit (the documented honest limit, same as
-    * [[compact]]'s caller-owned swap).
-    *
-    * Contract: `partCol` must be key-stable — a change row only matches
-    * target rows in ITS OWN partition (the read is pruned), so a key
-    * that moves partitions would insert a duplicate instead of moving
-    * the row; cross-partition key moves need the full-table path. New
-    * partition values in changes create fresh partitions; a partition
-    * whose rows all delete away is dropped from disk.
-    *
-    * @return number of partition directories swapped
-    */
-  def mergeDatePartitioned(spark: SparkSession, path: String,
-                           changes: DataFrame, keys: Seq[String],
-                           partCol: String = "p_date",
-                           deleteCol: Option[String] = None): Long = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    // finish any merge a previous run left mid-swap BEFORE computing a
-    // new one (the staged data of the pending merge is authoritative
-    // for its partitions; reading the live tree without recovering
-    // would merge against a half-applied state)
-    recoverMergePending(spark, path)
-    // with no manifest pending, anything in __trash is a PRIOR merge's
-    // leftovers (killed between manifest retirement and trash cleanup).
-    // Clearing it now restores this merge's rename-aside guarantee: a
-    // stale aside dir would otherwise make applyMergeManifest hard-
-    // delete the live partition instead of renaming it aside, silently
-    // voiding "pre-merge data survives in trash until the manifest
-    // retires" for that partition
-    fs.delete(new org.apache.hadoop.fs.Path(s"${path}__trash"), true)
-    val parts = changes.select(partCol).distinct().collect()
-      .map(_.get(0)).filter(_ != null)
-    if (parts.isEmpty) return 0L
-    val target = spark.read.parquet(path)
-      .filter(col(partCol).isInCollection(parts))
-    val out = merged(target, changes, keys, deleteCol)
-    val staging = s"${path}__staging"
-    out.write.mode(SaveMode.Overwrite).partitionBy(partCol).parquet(staging)
-    // the commit point: once this file exists, the merge WILL complete
-    // (here or in recovery); until it exists, the live tree is untouched
-    val entries = parts.map { v =>
-      val dir = s"$partCol=$v"
-      val kind = if (fs.exists(new org.apache.hadoop.fs.Path(staging, dir)))
-        "swap" else "drop" // drop: every row of the partition deleted
-      s"$kind $dir"
-    }
-    val manifest = new org.apache.hadoop.fs.Path(staging, MergeManifest)
-    val outStream = fs.create(manifest, true)
-    try outStream.write(entries.mkString("\n").getBytes("UTF-8"))
-    finally outStream.close()
-    applyMergeManifest(fs, root, staging, entries)
-  }
-
-  private val MergeManifest = "_MERGE_PENDING"
-
-  /** Replay (or finish) the swap phase of [[mergeDatePartitioned]] from
-    * its persisted manifest. Safe to call any time: a missing manifest
-    * is a no-op; a present one is applied idempotently — for a `swap`
-    * entry the staged dir still existing means the swap has not landed
-    * (staged dirs only leave staging by renaming INTO the live tree),
-    * so rename-aside + rename-in is redone, while a vanished staged dir
-    * means it already landed; a `drop` entry just ensures the live dir
-    * is aside. Returns the number of partitions applied by THIS call.
-    */
-  def recoverMergePending(spark: SparkSession, path: String): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = s"${path}__staging"
-    val manifest = new org.apache.hadoop.fs.Path(staging, MergeManifest)
-    if (!fs.exists(manifest)) return 0L
-    val in = fs.open(manifest)
-    val entries = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
-    applyMergeManifest(fs, root, staging, entries)
-  }
-
-  /** The swap phase: rename-aside to trash, rename staged dir in, then
-    * retire the manifest and clean trash + staging. Every step is
-    * idempotent under replay (see [[recoverMergePending]]).
-    */
-  private def applyMergeManifest(fs: org.apache.hadoop.fs.FileSystem,
-                                 root: org.apache.hadoop.fs.Path,
-                                 staging: String,
-                                 entries: Seq[String]): Long = {
-    val trash = new org.apache.hadoop.fs.Path(s"${root.toString}__trash")
-    fs.mkdirs(trash)
-    var swapped = 0L
-    entries.foreach { e =>
-      val Array(kind, dir) = e.split(" ", 2)
-      val from = new org.apache.hadoop.fs.Path(staging, dir)
-      val to = new org.apache.hadoop.fs.Path(root, dir)
-      val aside = new org.apache.hadoop.fs.Path(trash, dir)
-      kind match {
-        case "swap" if fs.exists(from) =>
-          // aside may hold the old dir from a killed prior attempt —
-          // keep the FIRST aside (it is the pre-merge data); only
-          // rename the live dir aside if trash has nothing yet
-          if (fs.exists(to)) {
-            if (fs.exists(aside)) fs.delete(to, true) else fs.rename(to, aside)
-          }
-          fs.rename(from, to)
-          swapped += 1
-        case "swap" => swapped += 1 // staged dir gone: already landed
-        case "drop" =>
-          if (fs.exists(to)) {
-            if (fs.exists(aside)) fs.delete(to, true) else fs.rename(to, aside)
-          }
-          swapped += 1
-        case other =>
-          throw new IllegalStateException(s"unknown merge-manifest entry: $other $dir")
-      }
-    }
-    // retire the commit marker FIRST (the merge is fully applied), then
-    // the old data — a kill between these leaves only garbage to sweep
-    fs.delete(new org.apache.hadoop.fs.Path(staging, MergeManifest), false)
-    fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    fs.delete(trash, true)
-    swapped
-  }
-
-  /** SMALL-FILE COMPACTION: rewrite a parquet directory's files into
-    * ~`targetBytes` outputs at `outPath`, sized from the directory's
-    * ACTUAL on-disk bytes (a row-count heuristic misestimates by the
-    * compression ratio). The operational fix for what streaming sinks
-    * and fine-grained partitioning do to a table over time — thousands
-    * of KB-files turn every scan into a file-listing + task-overhead
-    * problem long before bytes are the bottleneck (task scheduling is
-    * per-file-split; parquet footers are per-file).
-    *
-    * Writes to a NEW directory and returns the output file count — the
-    * swap (rename/retarget readers) is the caller's move, because a
-    * safe in-place swap needs a table format's atomic commit (the
-    * documented honest limit; plain directories get
-    * write-new-then-repoint). `coalesce` (not `repartition`) merges
-    * files WITHOUT a shuffle: compaction reads each input once and
-    * writes it once — at 100 TB the difference between an IO-bound
-    * rewrite and double-shuffling the table.
-    */
-  def compact(spark: SparkSession, inPath: String, outPath: String,
-              targetBytes: Long = 128L << 20): Long = {
-    require(targetBytes > 0, "targetBytes must be positive")
-    val fs = new org.apache.hadoop.fs.Path(inPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val onDisk = fs.getContentSummary(new org.apache.hadoop.fs.Path(inPath)).getLength
-    val nFiles = math.max(1L, (onDisk + targetBytes - 1) / targetBytes)
-    spark.read.parquet(inPath)
-      .coalesce(nFiles.toInt)
-      .write.mode(SaveMode.Overwrite).parquet(outPath)
-    fs.listStatus(new org.apache.hadoop.fs.Path(outPath))
-      .count(s => s.getPath.getName.endsWith(".parquet"))
-  }
-
   private val PublishMarkerSuffix = "__PUBLISH_PENDING"
 
-  /** Two-phase directory PUBLISH — the crash-recoverable repoint
-    * [[compact]] delegates to its caller, packaged: repoints `livePath`
-    * to the freshly-written `fromPath` via the merge swap's protocol in
-    * its degenerate one-directory form. A marker file
-    * `<live>__PUBLISH_PENDING` (containing the source path) persists
-    * BEFORE any mutation; the swap is rename-aside (live → trash) then
-    * rename-in (from → live); trash retires before the marker, so a
-    * kill at ANY point leaves a state [[recoverPublishPending]] — also
-    * auto-invoked here — finishes mechanically, and the pre-publish
-    * data survives in trash until the swap has fully landed.
+  /** Two-phase directory PUBLISH: crash-recoverably repoints `livePath`
+    * to the freshly-written directory `fromPath`.
+    *  1. Marker: `<live>__PUBLISH_PENDING`, holding the source path, is
+    *     written BEFORE any mutation of the live tree.
+    *  2. Rename-aside: the live directory is renamed to `<live>__trash`
+    *     rather than deleted, so the pre-publish data survives until the
+    *     swap has landed.
+    *  3. Rename-in: `fromPath` is renamed to `livePath`.
+    *  4. Retire: trash is deleted first, then the marker.
+    * A kill at ANY point leaves a state [[recoverPublishPending]] (also
+    * invoked here first) finishes mechanically.
     *
-    * Same reader caveat as the merge swap: a listing between the two
-    * renames sees the directory absent for two metadata ops; snapshot
-    * isolation needs a table format's commit.
+    * Plain directories cannot give snapshot isolation: a reader listing
+    * `livePath` between the two renames sees it absent for two metadata
+    * ops. A consistent cut needs a table format's commit.
     */
   def publishDirectory(spark: SparkSession, fromPath: String,
                        livePath: String): Unit = {
@@ -439,24 +181,5 @@ object Layout {
     // (marker still present), which finds nothing left to do
     fs.delete(trash, true)
     fs.delete(new org.apache.hadoop.fs.Path(livePath + PublishMarkerSuffix), false)
-  }
-
-  /** [[compact]] + [[publishDirectory]]: rewrite a directory's files to
-    * ~targetBytes outputs and repoint it in place, crash-recoverably.
-    * The rewrite goes to `<path>__compacting` (fresh each run), so a
-    * kill during the WRITE leaves the live dir untouched and only
-    * scratch to sweep.
-    */
-  def compactInPlace(spark: SparkSession, path: String,
-                     targetBytes: Long = 128L << 20): Long = {
-    // a prior run killed between publish's two renames leaves the live
-    // dir absent (moved aside, scratch not yet renamed in) — finish
-    // THAT publish before reading, or the read below fails where the
-    // doc promises self-healing
-    recoverPublishPending(spark, path)
-    val scratch = s"${path}__compacting"
-    val n = compact(spark, path, scratch, targetBytes)
-    publishDirectory(spark, scratch, path)
-    n
   }
 }

@@ -3,10 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Interchange sources/sinks (SURVEY.md §2.1 oracle-N rows): CSV in/out,
-  * JSON export, binary-file ingest for multimodal payloads. Thin,
-  * explicit wrappers — schema always declared on read (schema inference
-  * is a full extra scan at 100 TB).
+/** Interchange sources/sinks (SURVEY.md §2.1 oracle-N rows): CSV and
+  * JSON in/out. Thin, explicit wrappers — schema always declared on read
+  * (schema inference is a full extra scan at 100 TB).
   */
 object Sources {
 
@@ -44,19 +43,6 @@ object Sources {
       .options(csvDialect)
       .csv(path)
 
-  /** Streaming twin of [[readCsv]] — the same pinned dialect over a
-    * file-stream source, for CSV landing zones (the common ingest shape:
-    * producers drop delimited files, the pipeline tails the directory).
-    * Schema is REQUIRED: a streaming source cannot re-infer per batch.
-    */
-  def readCsvStream(spark: SparkSession, path: String, schema: StructType,
-                    header: Boolean = true): DataFrame =
-    spark.readStream
-      .option("header", header.toString)
-      .options(csvDialect)
-      .schema(schema)
-      .csv(path)
-
   /** Line-delimited JSON export — the reference's output format.
     * Timestamps pinned to full µs like the CSV dialect: the default
     * JSON pattern keeps only milliseconds, a SILENT precision loss the
@@ -71,40 +57,4 @@ object Sources {
     spark.read.schema(schema)
       .option("timestampFormat", "yyyy-MM-dd HH:mm:ss.SSSSSS")
       .json(path)
-
-  /** Read a parquet directory whose files were written under EVOLVING
-    * schemas (ingest drift: a producer adds a column mid-table). Plain
-    * `spark.read.parquet` infers the schema from ONE footer — which
-    * file wins is listing-order luck, so a drifted table silently
-    * gains or loses the new column run to run. `mergeSchema` unions
-    * the footers instead: added columns surface everywhere and read as
-    * NULL for pre-drift files, and an incompatible type change fails
-    * LOUDLY at read time instead of corrupting (SchemaEvolutionSpec
-    * pins all three behaviors). The union costs a footer read per file
-    * — at 100 TB set `spark.sql.parquet.mergeSchema` off for stable
-    * tables and read drifted ones through this helper (or keep schemas
-    * in a real catalog, the honest fix).
-    */
-  def readParquetEvolving(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
-
-  /** Columnar interchange beyond parquet: ORC keeps the same pushdown /
-    * pruning story (PushedFilters + ReadSchema in the scan) with a
-    * different on-disk ecosystem. (Avro is not bundled in this image's
-    * jars, so parquet/ORC are the columnar pair.)
-    */
-  def writeOrc(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).orc(path)
-
-  def readOrc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  /** Whole-file binary ingest (images/audio/video as opaque payloads):
-    * (path, modificationTime, length, content) rows — feed to
-    * graft.pipeline.Multimodal decoders.
-    */
-  def readBinaryFiles(spark: SparkSession, dir: String, glob: String = "*"): DataFrame =
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", glob)
-      .load(dir)
 }

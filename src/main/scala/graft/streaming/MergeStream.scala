@@ -121,7 +121,7 @@ object MergeStream {
     */
   def purgeTombstones(spark: SparkSession, path: String, deleteCol: String,
                       versionCol: String, versionHorizon: Long): Long = {
-    // a prior purge (or compaction) killed mid-swap leaves the live dir
+    // a prior purge (or any publish) killed mid-swap leaves the live dir
     // absent — finish THAT publish before reading
     Layout.recoverPublishPending(spark, path)
     val t = spark.read.parquet(path)

@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.marine.{Marine, Races}
 
 /** Multi-boat (fleet) marine pipeline: one file per boat, every stage
-  * partitioned by boat_id — the parallel scale path the Channels docs
-  * promise.
+  * partitioned by boat_id — the parallel scale path
+  * `Marine.wideTableByKey` promises.
   */
 class FleetSpec extends SparkSpec {
 

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.marine.{Channels, Derived, Marine, Nmea, Races}
+import graft.marine.{Derived, Marine, Nmea, Races}
 
 /** Golden-file + invariant tests for the marine module (SURVEY.md §2.10,
   * FIXTURES.md §B). The fixture log is generated deterministically here
@@ -57,6 +57,8 @@ class MarineSpec extends SparkSpec {
   private lazy val logPath =
     NmeaFixture.write(Files.createTempDirectory("nmea").toString)
   private lazy val parsed = Marine.readLog(spark, logPath)
+  // the first clock tick: the fixture's fix 0 and the sentences after it
+  private lazy val firstTick = Marine.wideTable(parsed).orderBy("ts").head()
 
   test("checksum: valid sentences pass, corrupted and truncated are rejected") {
     val all = Nmea.parseAll(
@@ -67,29 +69,21 @@ class MarineSpec extends SparkSpec {
   }
 
   test("coordinate conversion: 4739.1234,N → 47.65206°") {
-    val first = Nmea.rmc(parsed).orderBy("utc_s").select("lat", "lon").head()
-    assert(math.abs(first.getDouble(0) - (47 + 39.1234 / 60)) < 1e-9)
-    assert(math.abs(first.getDouble(1) - -(122 + 25.5678 / 60)) < 1e-9)
+    assert(math.abs(firstTick.getAs[Double]("lat") - (47 + 39.1234 / 60)) < 1e-9)
+    assert(math.abs(firstTick.getAs[Double]("lon") - -(122 + 25.5678 / 60)) < 1e-9)
   }
 
   test("RMC timestamps assemble date+time correctly") {
-    val ts = Nmea.rmc(parsed).orderBy("utc_s").select("ts").head().getTimestamp(0)
-    assert(ts.toInstant.toString == "2022-10-12T14:43:26Z")
+    // 1665585806 s = 2022-10-12T14:43:26Z
+    assert(firstTick.getAs[Double]("ts") == 1665585806.0)
   }
 
-  test("typed projections extract the documented fields") {
-    val vhw = Nmea.vhw(parsed).head()
-    assert(vhw.getDouble(1) == 208.0 && vhw.getDouble(2) == 194.9)
-    val dpt = Nmea.dpt(parsed).orderBy("raw").head()
-    assert(dpt.getDouble(1) > 12.0)
-    val mwv = Nmea.mwv(parsed).head()
-    assert(mwv.getString(2) == "R" && mwv.getDouble(3) == 11.3)
-    val gga = Nmea.gga(parsed).head()
-    assert(gga.getInt(4) == 1 && gga.getInt(5) == 8 && gga.getDouble(7) == 4.2)
-    val hdg = Nmea.hdg(parsed).head()
-    assert(hdg.getDouble(1) == 195.2 && hdg.getDouble(2) == 16.1) // E variation positive
-    val vwr = Nmea.vwr(parsed).head()
-    assert(vwr.getDouble(1) == 42.0 && vwr.getDouble(2) == 11.3)
+  test("wide table decodes VHW, MWV and DPT fields by position") {
+    assert(firstTick.getAs[Double]("hdg") == 208.0)
+    assert(firstTick.getAs[Double]("stw") == 5.2)
+    assert(firstTick.getAs[Double]("awa") == 42.0)
+    assert(firstTick.getAs[Double]("aws") == 11.3)
+    assert(firstTick.getAs[Double]("depth") == 12.7)
   }
 
   test("wide table aligns channels onto the RMC clock with carry-forward") {
@@ -106,9 +100,8 @@ class MarineSpec extends SparkSpec {
     // hand-computed wind triangle (law of cosines / atan2):
     // tws = sqrt(11.3² + 5.2² − 2·11.3·5.2·cos42°) = sqrt(67.395) ≈ 8.2095
     // twa = atan2(11.3·sin42°, 11.3·cos42° − 5.2) = atan2(7.5612, 3.1975) ≈ 67.08°
-    val wide = Marine.wideTable(parsed).orderBy("ts").head()
-    val tws = wide.getDouble(wide.fieldIndex("tws"))
-    val twa = wide.getDouble(wide.fieldIndex("twa"))
+    val tws = firstTick.getAs[Double]("tws")
+    val twa = firstTick.getAs[Double]("twa")
     assert(math.abs(tws - 8.2095) < 0.01, s"tws=$tws")
     assert(math.abs(twa - 67.08) < 0.05, s"twa=$twa")
   }

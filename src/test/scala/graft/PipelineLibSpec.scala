@@ -78,14 +78,6 @@ class PipelineLibSpec extends SparkSpec {
     })
   }
 
-  test("Dedup.simhash: identical texts get identical fingerprints") {
-    val fp = Dedup.simhash(docs.limit(50), "doc_id", "text")
-    assert(fp.count() == 50)
-    val joined = fp.join(docs.select("doc_id", "text"), "doc_id")
-      .groupBy("text").agg(countDistinct("simhash").as("n"))
-    assert(joined.filter(col("n") > 1).count() == 0)
-  }
-
   test("Dedup.clusters propagates min labels across chains and components") {
     import spark.implicits._
     // component {0..4} as a worst-case path + star {10,11,12} + pair {20,21}
@@ -140,25 +132,6 @@ class PipelineLibSpec extends SparkSpec {
     val all = docs.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept == all -- Set(3L, 7L, 101L),
       "exactly the non-minimum cluster members are dropped")
-  }
-
-  test("bottom-k sketch: order-invariant, padded, duplicate-preserving") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, "alpha beta gamma delta"),
-      (2L, "delta  gamma beta alpha"),  // same token set, different order/spacing
-      (3L, "alpha beta gamma delta"),   // exact duplicate of 1
-      (4L, "zeta"))                     // 1 token → 15 padded positions
-      .toDF("doc_id", "text")
-    val sigs = df.select(col("doc_id"),
-        Dedup.minhashSignatureBottomK(col("text"), 16).as("sig"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(sigs(1) == sigs(2), "signature must depend only on the token set")
-    assert(sigs(1) == sigs(3), "identical texts must sign identically")
-    assert(sigs.values.forall(s => s.length == 16 && !s.contains(null)),
-      "padding must fill every position")
-    assert(sigs(4).toSet == Set(sigs(4).head, Long.MaxValue),
-      "a 1-token doc is its hash plus MaxValue padding")
   }
 
   test("fast LSH clustering groups dups but never unrelated short docs") {
@@ -239,12 +212,6 @@ class PipelineLibSpec extends SparkSpec {
     val bruteAll = Similarity.bruteTopK(emb, probe, 2000).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
     ann.foreach(r => assert(math.abs(bruteAll(r.getLong(0)) - r.getDouble(1)) < 1e-12))
-  }
-
-  test("Similarity.labelCentroids returns one 64-dim centroid per label") {
-    val c = Similarity.labelCentroids(emb).collect()
-    assert(c.length == emb.select("label").distinct().count())
-    c.foreach(r => assert(r.getSeq[Double](1).length == 64))
   }
 
   test("Multimodal decode round-trips header metadata through mapPartitions") {

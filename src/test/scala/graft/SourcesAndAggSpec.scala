@@ -18,26 +18,6 @@ class SourcesAndAggSpec extends SparkSpec {
       docs.agg(sum("n_chars")).head.getLong(0))
   }
 
-  test("streaming CSV ingest reads the pinned dialect identically to the batch reader") {
-    import org.apache.spark.sql.functions.{count => fcount}
-    val tmp = Files.createTempDirectory("csvstream").toString + "/landing"
-    val docs = Tables.documents(spark, sf).select("doc_id", "lang", "n_chars")
-    Sources.writeCsv(docs, tmp)
-    val expected = Sources.readCsv(spark, tmp, docs.schema)
-      .groupBy("lang").agg(fcount(lit(1)).as("n"), sum("n_chars").as("chars"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val q = Sources.readCsvStream(spark, tmp, docs.schema)
-      .groupBy("lang").agg(fcount(lit(1)).as("n"), sum("n_chars").as("chars"))
-      .writeStream.format("memory").queryName("csv_ingest")
-      .outputMode("complete").start()
-    try {
-      q.processAllAvailable()
-      val got = spark.table("csv_ingest")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      assert(got == expected, s"stream vs batch over the same files: $got vs $expected")
-    } finally q.stop()
-  }
-
   test("JSON round-trip preserves nulls, embedded quotes, unicode and µs timestamps") {
     import spark.implicits._
     val tmp = Files.createTempDirectory("json2").toString + "/tricky"
@@ -71,39 +51,6 @@ class SourcesAndAggSpec extends SparkSpec {
     val back = Sources.readJson(spark, tmp, docs.schema)
     assert(back.count() == 2)
     assert(back.select(col("meta.n_samples")).collect().map(_.getLong(0)).sum == 15)
-  }
-
-  test("ORC round-trip preserves rows and pushes filters into the scan") {
-    val tmp = Files.createTempDirectory("orc").toString + "/li"
-    val li = Tables.lineitem(spark, sf)
-      .select("l_orderkey", "l_quantity", "l_extendedprice")
-    Sources.writeOrc(li, tmp)
-    val back = Sources.readOrc(spark, tmp)
-    assert(back.count() == li.count())
-    val filtered = back.filter(col("l_quantity") > 25.0).select("l_orderkey")
-    val plan = filtered.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("l_quantity"),
-      s"ORC scan must push the filter: ${plan.take(400)}")
-    assert(filtered.count() ==
-      li.filter(col("l_quantity") > 25.0).count())
-  }
-
-  test("binaryFile source reads whole files as payload rows") {
-    val dir = Files.createTempDirectory("bin")
-    Files.write(dir.resolve("a.bin"), Array[Byte](1, 2, 3))
-    Files.write(dir.resolve("b.bin"), Array[Byte](4, 5))
-    val df = Sources.readBinaryFiles(spark, dir.toString, "*.bin")
-    val rows = df.select("length", "content").collect()
-    assert(rows.map(_.getLong(0)).sorted.sameElements(Array(2L, 3L)))
-  }
-
-  test("salted aggregation matches the direct groupBy on a skewed column") {
-    val events = Tables.events(spark, sf)
-    val direct = events.groupBy("event_type").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = Skew.saltedCount(events, "event_type", col("event_id"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == direct)
   }
 
   test("salted join matches the plain join") {

@@ -30,6 +30,21 @@ class VectorExpressionsSpec extends SparkSpec {
     assert(both.filter(col("native") =!= col("hof")).count() == 0)
   }
 
+  test("vector_cosine(x, x): zero vector NaN, null null, unit vector 1.0") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, Some(Array(0.0f, 0.0f))),
+      (2L, Option.empty[Array[Float]]),
+      (3L, Some(Array(1.0f, 0.0f))))
+      .toDF("id", "embedding")
+    val out = df.select(col("id"),
+      GraftFunctions.vectorCosine(col("embedding"), col("embedding")).as("c"))
+      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) null else r.getDouble(1))).toMap
+    assert(out(1L).asInstanceOf[Double].isNaN, "zero vector → NaN")
+    assert(out(2L) == null, "null vector → null")
+    assert(out(3L) == 1.0)
+  }
+
   test("vector_dist_sq matches the (x−y)² fold bit-for-bit, zero to self") {
     val pairs = emb.select(col("vec_id"), col("embedding").as("a"))
       .crossJoin(broadcast(emb.filter(col("vec_id") === 2)
