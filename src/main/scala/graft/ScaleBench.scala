@@ -158,6 +158,41 @@ object ScaleBench {
         .foreach(pp => java.nio.file.Files.deleteIfExists(pp))
     } catch { case _: Throwable => () }
 
+  private def nmeaChecksum(body: String): String =
+    f"${body.getBytes("ASCII").foldLeft(0)((a, b) => a ^ b)}%02X"
+  private def sentence(body: String): String = s"$$$body*${nmeaChecksum(body)}"
+
+  /** Deterministic synthetic NMEA log for the fleet corpus: one fix =
+    * RMC + VHW + MWV + DPT, 4 lines per fix, ~20k fixes per day, times
+    * walking 1 Hz within a day.
+    */
+  private def generateNmea(path: String, nLines: Long): Unit = {
+    val w = java.nio.file.Files.newBufferedWriter(java.nio.file.Paths.get(path))
+    val perFix = 4
+    val nFixes = nLines / perFix
+    var i = 0L
+    while (i < nFixes) {
+      val day = i / 20000 // ~20k fixes per "day"
+      val tIdx = i % 20000
+      val hh = 8 + (tIdx / 3600).toInt; val mm = ((tIdx / 60) % 60).toInt; val ss = (tIdx % 60).toInt
+      val t = f"$hh%02d$mm%02d$ss%02d.00"
+      // real calendar arithmetic: ddmmyy must roll over month/year
+      // correctly or the epoch clock goes non-monotonic on long logs
+      val d = java.time.LocalDate.of(2022, 10, 12).plusDays(day)
+      val ddmmyy = f"${d.getDayOfMonth}%02d${d.getMonthValue}%02d${d.getYear % 100}%02d"
+      val lat = 4739.0 + (i % 997) * 0.001
+      val lon = 12225.0 + (i % 991) * 0.001
+      val sog = 4.5 + (i % 37) * 0.1
+      val awa = if ((i / 600) % 2 == 0) 40.0 + (i % 11) else 320.0 - (i % 11)
+      w.write(sentence(f"GPRMC,$t,A,$lat%.4f,N,$lon%.4f,W,$sog%.1f,210.3,$ddmmyy,,,A")); w.newLine()
+      w.write(sentence(f"IIVHW,208.0,T,194.9,M,${sog - 0.3}%.1f,N,9.6,K")); w.newLine()
+      w.write(sentence(f"IIMWV,$awa%.1f,R,${10.0 + (i % 23) * 0.2}%.1f,N,A")); w.newLine()
+      w.write(sentence(f"IIDPT,${10.0 + (i % 53) * 0.3}%.1f,0.0")); w.newLine()
+      i += 1
+    }
+    w.close()
+  }
+
   def main(args: Array[String]): Unit = {
     val copies = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -174,7 +209,7 @@ object ScaleBench {
       replicate(spark, src, "events", copies, Seq("event_id", "user_id"), out))
     val documents = replicate(spark, src, "documents", copies, Seq("doc_id"), out)
     // the UNREPLICATED corpus, for rows where replication would distort
-    // the distribution being tested (the ngram A/B: every copy repeats
+    // the distribution being tested (the ngram pairs: every copy repeats
     // the same texts, so df scales ×copies and pair fan-out ×copies²)
     val documents1x = spark.read.parquet(s"$src/documents.parquet")
     val embeddings = replicate(spark, src, "embeddings", copies, Seq("vec_id"), out)
@@ -213,7 +248,7 @@ object ScaleBench {
 
     val dupDocs = sys.env.getOrElse("SPARK_GRAFT_STREAM_DOCS", "100000").toLong
 
-    // r16: the hot-gram corpus for the window-skew A/B rows (see their
+    // r16: the hot-gram corpus for the window-skew rows (see their
     // comments). 500k docs of "a b c uniqN": word-3-grams are "a b c"
     // (df = 500k — ONE gram owns half the 1M-row gram stream) and
     // "b c uniqN" (unique); the token stream's hot words a/b/c own 3/4
@@ -233,35 +268,15 @@ object ScaleBench {
       .select(col("id").as("a_id"), (col("id") + 1).as("b_id"))
 
     // r16: pathological-document corpus for the bigram_logprob memory
-    // rows — 16 docs × 200k tokens each, adjacent pairs ~all distinct
+    // row — 16 docs × 200k tokens each, adjacent pairs ~all distinct
     // (word_i = w<(i² + 31·doc) mod 99991>, a quadratic walk over a
     // 100k-word vocab), so each doc contributes ~200k distinct (w1, w2)
-    // structs to its per-doc aggregation buffer. Deterministic,
-    // generated in-plan.
+    // rows to its per-doc fold. Deterministic, generated in-plan.
     val longDocTokens = sys.env.getOrElse("SPARK_GRAFT_LONGDOC_TOKENS", "200000").toLong
     val longDocs = spark.range(0, 16, 1, 16)
       .select(col("id").as("doc_id"),
         concat_ws(" ", expr(s"transform(sequence(1, $longDocTokens), " +
           "i -> concat('w', pmod(CAST(i AS BIGINT) * i + 31 * id, 99991)))")).as("text"))
-
-    /** Scoped AQE skew-split confs for the window-skew A/B pair: the
-      * 256 MB default threshold is cluster-sized, so for the local
-      * corpus it must drop for skew splitting to be OBSERVABLE at all.
-      * Applied to BOTH shapes (the window cannot use it by
-      * construction — that asymmetry is the thing being measured).
-      */
-    def withSkewSplit[A](body: => A): A = {
-      val confs = Seq(
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "4m",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m")
-      val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
-    }
 
     /** Generate (once) the 10-boat fleet corpus; both the batch fleet row
       * and the streaming NMEA row read the SAME directory, so their
@@ -275,7 +290,7 @@ object ScaleBench {
       if (!java.nio.file.Files.exists(marker)) {
         java.nio.file.Files.createDirectories(java.nio.file.Paths.get(fleetDir))
         (0 until 10).foreach(b =>
-          MarineBench.generate(f"$fleetDir/boat$b%02d.nmea", perBoat))
+          generateNmea(f"$fleetDir/boat$b%02d.nmea", perBoat))
         java.nio.file.Files.createFile(marker)
       }
       fleetDir
@@ -545,25 +560,12 @@ object ScaleBench {
         pipeline.Dedup.nearDuplicates(
           documents.filter(col("doc_id") < 5000), "doc_id", "text", 0.8, 16, 4).count()
       },
-      // r16 PPJoin A/B on the UNREPLICATED 1× corpus — already the
-      // skewed validation corpus the prefix filter exists for (5000
-      // docs; the hottest 3-gram sits in 96% of them, so the gram-join
+      // r16 PPJoin on the UNREPLICATED 1× corpus — already the skewed
+      // validation corpus the prefix filter exists for (5000 docs; the
+      // hottest 3-gram sits in 96% of them, so a gram-equi-join's
       // fan-out is Σ df² = 1.10 G ordered pairs at 1× and 110 G at the
-      // 10× replica — replication multiplies every df by 10 and the
-      // fan-out by 100, so 1× unbounded is the largest size where BOTH
-      // shapes still run; the prefix fan-out is 22× smaller, 49.8 M).
-      // Both rows run the exact code of the dedup_ngram oracle key and
-      // its r15 predecessor; A/B on a 2000-doc prefix keeps the old
-      // shape's row under control (~176 M pairs), the 5000-doc row
-      // runs the new shape where the old one is already infeasible.
-      t("ngram_pairs_gramjoin_2k_docs") {
-        operators.DedupQueries.ngramJaccardGramJoin(
-          documents1x.filter(col("doc_id") < 2000)).count()
-      },
-      t("ngram_pairs_ppjoin_2k_docs") {
-        operators.DedupQueries.ngramJaccardPpjoin(
-          documents1x.filter(col("doc_id") < 2000)).count()
-      },
+      // 10× replica, while the prefix fan-out is 22× smaller, 49.8 M).
+      // Runs the exact code of the dedup_ngram oracle key, unbounded.
       t("ngram_pairs_ppjoin_5k_docs") {
         operators.DedupQueries.ngramJaccardPpjoin(documents1x).count()
       },
@@ -907,35 +909,27 @@ object ScaleBench {
       t("boilerplate_50k_docs") {
         operators.TextAnalysisQueries.boilerplateCore(documents).count()
       },
-      // r16 window-skew pricing (verdict item 2): the df-count WINDOW of
+      // r16 window-skew pricing: the df-count WINDOW of
       // boilerplate/tfidf/unigram_logprob pins every row of a hot
       // gram/word to ONE task, and AQE skew handling never applies to
       // windows — only to joins. The fixtures cannot show it (their
-      // hottest gram holds ~2% of gram rows), so these rows run both
-      // shapes on a SYNTHETIC hot-gram corpus where one gram owns HALF
-      // the gram stream (hotDocs docs of "a b c uniqN": grams "a b c"
-      // [df = hotDocs] + "b c uniqN" [unique]). Both rows run under the
-      // same scoped skew-split confs (thresholds are cluster-tuned;
-      // locally they must drop for the 256 MB default to be emulable) —
-      // the window CANNOT use the splitting, the rejoin can.
+      // hottest gram holds ~2% of gram rows), so these rows run the
+      // declared shapes on a SYNTHETIC hot-gram corpus where one gram
+      // owns HALF the gram stream (hotDocs docs of "a b c uniqN": grams
+      // "a b c" [df = hotDocs] + "b c uniqN" [unique]); read the hot
+      // task's straggler time in the row output. (The filters read the
+      // window's output: a bare count() lets the optimizer prune the
+      // window away.)
       t("boilerplate_window_hotgram_500k") {
-        withSkewSplit { operators.TextAnalysisQueries
-          .boilerplateCore(hotGramDocs).count() }
+        operators.TextAnalysisQueries.boilerplateCore(hotGramDocs)
+          .filter(col("n_boiler") >= 0).count()
       },
-      t("boilerplate_rejoin_hotgram_500k") {
-        withSkewSplit { operators.TextAnalysisQueries
-          .boilerplateRejoinCore(hotGramDocs).count() }
-      },
-      // same A/B one shape over: unigram_logprob's corpus word-count
-      // window vs the groupBy+rejoin twin, on a stream where the three
-      // hot words own 3/4 of all token rows
+      // the same exposure one shape over: unigram_logprob's corpus
+      // word-count window, on a stream where the three hot words own
+      // 3/4 of all token rows
       t("unigram_window_hotword_500k") {
-        withSkewSplit { operators.TextAnalysisQueries
-          .unigramLogprobCore(hotGramDocs).count() }
-      },
-      t("unigram_rejoin_hotword_500k") {
-        withSkewSplit { operators.TextAnalysisQueries
-          .unigramLogprobRejoinCore(hotGramDocs).count() }
+        operators.TextAnalysisQueries.unigramLogprobCore(hotGramDocs)
+          .filter(col("sum_logp") <= 0).count()
       },
       // bigram-LM scoring at 10× (50k docs): the w1-window shape must
       // stay linear in bigram volume — one bigram agg + one w1 exchange
@@ -944,17 +938,13 @@ object ScaleBench {
       t("bigram_logprob_50k_docs") {
         operators.TextAnalysisQueries.bigramLogprobCore(documents).count()
       },
-      // r16 (verdict item 3): the long-document MEMORY bound of the
-      // per-doc collect_list. 16 docs × 200k tokens whose bigrams are
-      // ~all distinct: each doc's (w1, w2, term) stream lands in ONE
-      // TypedImperativeAggregate buffer (~unspillable) in the collect
-      // form, vs a spillable window sort + O(1) running sum in the
-      // stream twin. Read peak_task_mem / spilled in the row output.
-      t("bigram_logprob_collect_longdocs") {
+      // the long-document MEMORY bound of the per-doc fold: 16 docs ×
+      // 200k tokens whose bigrams are ~all distinct, so each doc's
+      // (w1, w2, term) stream is one window partition — a spillable
+      // sort + O(1) running sum. Read peak_task_mem / spilled in the
+      // row output.
+      t("bigram_logprob_longdocs") {
         operators.TextAnalysisQueries.bigramLogprobCore(longDocs).count()
-      },
-      t("bigram_logprob_stream_longdocs") {
-        operators.TextAnalysisQueries.bigramLogprobStreamCore(longDocs).count()
       },
       // BPE pair counting at 10× (50k docs): the pair fan-out runs over
       // the VOCAB (types), so past the word aggregate the cost is
@@ -1135,8 +1125,8 @@ object ScaleBench {
       // (multi-day — the generator rolls ~80k lines/day), every stage
       // keyed by boat_id so the whole pipeline is 10-way-parallel per
       // stage boundary, replay docs as the sink. Corpus cached like the
-      // parquet tables; MarineBench stays the single-boat/lines-per-sec
-      // anchor, this row is the fleet growth curve.
+      // parquet tables; perfbench marine_log is the checked single-log
+      // lines-per-sec anchor, this row is the fleet growth curve.
       t(s"marine_fleet_10boat_${copies * 400000L / 1000}k_lines") {
         val fleetDir = ensureFleet(s"$out/fleet", copies * 40000L)
         val wide = marine.Marine.wideTableByKey(

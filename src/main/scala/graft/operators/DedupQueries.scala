@@ -164,29 +164,6 @@ object DedupQueries extends QueryPack {
     sequence(lit(1), length(col("text")) - 2),
     i => expr("text").substr(i, lit(3))))
 
-  /** The r15 gram-equi-join shape, kept verbatim as the ScaleBench A/B
-    * baseline for [[ngramJaccardPpjoin]]: exact, but its fan-out is
-    * Σ df² over all grams — hot-gram-occupancy-bounded, infeasible on a
-    * corpus with boilerplate grams (110 G pairs at 10× unbounded).
-    */
-  def ngramJaccardGramJoin(docs: DataFrame): DataFrame = {
-    val grams = docs
-      .filter(length(col("text")) >= 3)
-      .select(col("doc_id"), gramSetCol.as("grams"))
-      .select(col("doc_id"), size(col("grams")).as("n_grams"),
-        explode_outer(col("grams")).as("gram"))
-    val a = grams.select(col("doc_id").as("a_id"), col("n_grams").as("na"), col("gram"))
-    val b = grams.select(col("doc_id").as("b_id"), col("n_grams").as("nb"), col("gram"))
-    a.join(b, "gram")
-      .filter(col("a_id") < col("b_id"))
-      .groupBy(col("a_id"), col("b_id"), col("na"), col("nb"))
-      .agg(count(lit(1)).cast("int").as("n_inter"))
-      .withColumn("jac",
-        col("n_inter") / (col("na") + col("nb") - col("n_inter")))
-      .filter(col("jac") >= 0.8)
-      .select(col("a_id"), col("b_id"), round(col("jac"), 4).as("jaccard"))
-  }
-
   /** PPJoin prefix-filtered char-3-gram Jaccard ≥ 0.8 (exact; see
     * [[dedupNgram]] for the bound proof). Stages:
     *   1. gram df counts (hash aggregate — map-side partials make it

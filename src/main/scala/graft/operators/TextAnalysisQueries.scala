@@ -386,36 +386,6 @@ object TextAnalysisQueries extends QueryPack {
           .as("boiler_frac"))
   }
 
-  /** The SKEW-ROBUST twin of [[boilerplateCore]], for ScaleBench's
-    * hot-gram A/B (r16, verdict item 2): df via groupBy(gram) — whose
-    * map-side partials collapse a hot gram BEFORE the exchange — then a
-    * rejoin that AQE's skew-join splitting can break up at runtime. The
-    * count WINDOW of the oracle key puts every row of a hot gram in ONE
-    * task, and skew-join handling never applies to windows (guide
-    * §2.5). Same rows by construction (count per gram attached to each
-    * (doc, gram) row either way); NOT the declared key because the
-    * second gram exchange measured 3× worse at sf0.1 (r15 probe) and
-    * the fixtures' hottest gram holds ~2% of gram rows — no straggler
-    * to pay for. On a corpus where one gram owns half the rows, this is
-    * the shape that survives; see the ScaleBench rows.
-    */
-  def boilerplateRejoinCore(documents: DataFrame): DataFrame = {
-    val grams = documents
-      .select(col("doc_id"), filter(words, w => w =!= "").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id"),
-        explode(array_distinct(expr("transform(sequence(1, size(toks) - 2), " +
-          "i -> concat_ws(' ', slice(toks, i, 3)))"))).as("gram"))
-    val dfs = grams.groupBy(col("gram")).agg(count(lit(1)).as("df"))
-    grams.join(dfs, "gram")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_grams"),
-        count(when(col("df") >= 3, 1)).as("n_boiler"))
-      .select(col("doc_id"), col("n_grams"), col("n_boiler"),
-        round(col("n_boiler").cast("double") / col("n_grams"), 4)
-          .as("boiler_frac"))
-  }
-
   /** Gopher-style QUALITY-FILTER RULE BATTERY: the boolean gates of a
     * pre-training cleaning pass (Rae et al. 2021's document filters,
     * adapted to this corpus's scale) — token count in [30, 100k], mean
@@ -526,41 +496,6 @@ object TextAnalysisQueries extends QueryPack {
         round(col("logp") / col("n_tokens"), 4).as("avg_logp"))
   }
 
-  /** The SKEW-ROBUST twin of [[unigramLogprobCore]] (r16, ScaleBench
-    * hot-word A/B — see [[boilerplateRejoinCore]] for the rationale):
-    * corpus word counts via groupBy (map-side partials collapse hot
-    * words) + an AQE-splittable rejoin, instead of the sum window that
-    * pins every row of a hot word to one task. Identical rows: n per
-    * (doc, word) is the same integer either way, and the per-doc sorted
-    * fold is untouched.
-    */
-  def unigramLogprobRejoinCore(documents: DataFrame): DataFrame = {
-    val toks = documents
-      .select(col("doc_id"),
-        explode(filter(words, w => w =!= "")).as("word"))
-    val total = documents
-      .agg(sum(size(filter(words, w => w =!= "")).cast("long")).as("t"))
-    val dwc = toks
-      .groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("c"))
-    val wc = dwc.groupBy(col("word")).agg(sum(col("c")).as("n"))
-    dwc
-      .join(wc, "word")
-      .crossJoin(broadcast(total))
-      .withColumn("term",
-        col("c").cast("double") *
-          log(col("n").cast("double") / col("t").cast("double")))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c")).as("n_tokens"),
-        collect_list(struct(col("word"), col("term"))).as("terms"))
-      .select(col("doc_id"), col("n_tokens"),
-        expr("aggregate(array_sort(terms), CAST(0.0 AS DOUBLE), " +
-          "(acc, x) -> acc + x.term)").as("logp"))
-      .select(col("doc_id"), col("n_tokens"),
-        round(col("logp"), 4).as("sum_logp"),
-        round(col("logp") / col("n_tokens"), 4).as("avg_logp"))
-  }
-
   /** BIGRAM-LM document scoring — the second-order extension of
     * `text_unigram_logprob` (fluency-sensitive quality scoring: a doc of
     * real sentences beats a bag of common words, which the unigram score
@@ -570,17 +505,32 @@ object TextAnalysisQueries extends QueryPack {
     * count of bigrams starting w1 and V the corpus vocabulary size.
     *
     * Float determinism is the unigram key's sorted-fold contract one
-    * order higher: per-doc (w1, w2) pairs are unique after counting, so
-    * the fold over the array_sort'ed (w1, w2, term) structs is a total
-    * order both engines replay bit-for-bit; each term is c·ln of
-    * identical exact-integer ratios (counts < 2^53).
+    * order higher, streamed instead of collected: per-doc (w1, w2) pairs
+    * are unique after counting, so (w1, w2) is a total order inside a
+    * doc; rows sort by (doc, w1, w2) inside a window and a running-frame
+    * sum adds the terms one by one in that order (running aggregation
+    * evaluates incrementally per row; its null-skipping sum ≡ a 0.0-init
+    * left fold since terms are non-null), and the last row per doc
+    * carries the total. DuckDB replays the same adds as a list_sort +
+    * list_reduce over the (w1, w2, term) structs: the struct sort orders
+    * by (w1, w2) before ever reaching term, and both engines compare
+    * strings as binary UTF-8. Each term is c·ln of identical
+    * exact-integer ratios (counts < 2^53), so the result is bit-identical.
+    *
+    * Memory: the per-doc buffer is the window sort's
+    * UnsafeExternalSorter, which SPILLS — a pathological document is a
+    * slowdown, not an OOM. A per-doc `collect_list` + `array_sort` would
+    * hold a whole document's distinct-bigram stream in one
+    * TypedImperativeAggregate buffer, which cannot spill.
     *
     * Plan: per-doc bigram counts (one hash agg), then BOTH corpus
     * statistics ride ONE w1 exchange — the prefix-count window
     * partitions by w1, and the (w1, w2) bigram-count window's clustering
     * is satisfied by that same hash(w1) partitioning, so Spark plans a
-    * sort, not a second exchange (window order matters: pn first). No
-    * rejoin, no second corpus pass; the vocab scalar broadcasts.
+    * sort, not a second exchange (window order matters: pn first). Then
+    * one doc_id exchange and one (doc, w1, w2) sort serve every per-doc
+    * window. No rejoin, no second corpus pass; the vocab scalar
+    * broadcasts.
     */
   private def textBigramLogprob(s: SparkSession, dir: String): DataFrame =
     bigramLogprobCore(Tables.documents(s, dir)).orderBy(col("doc_id"))
@@ -611,60 +561,11 @@ object TextAnalysisQueries extends QueryPack {
       // trade is the count's map-side partial phase, worth ~nothing
       // here: (doc, w1, w2) is nearly unique per row, partials barely
       // collapse. Honest measurement: flat at sf0.1 AND at 10× (the
-      // explode + per-doc collect dominate at these sizes) — this is a
+      // explode + per-doc fold dominate at these sizes) — this is a
       // shuffle-VOLUME halving that pays where shuffle is the
       // constraint, i.e. real cluster fabric, not a local[32] page
       // cache. Skew note: the w1 windows pinned the hot-prefix
       // exposure already; this adds no new skew surface.
-      .repartition(col("w1"))
-      .groupBy(col("doc_id"), col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c"))
-    val wPre = org.apache.spark.sql.expressions.Window.partitionBy("w1")
-    val wBg = org.apache.spark.sql.expressions.Window.partitionBy("w1", "w2")
-    dbc
-      .withColumn("pn", sum(col("c")).over(wPre))
-      .withColumn("cnt", sum(col("c")).over(wBg))
-      .crossJoin(broadcast(vocab))
-      .withColumn("term", col("c").cast("double") *
-        log((col("cnt") + 1).cast("double") / (col("pn") + col("v")).cast("double")))
-      .groupBy(col("doc_id"))
-      .agg(sum(col("c")).as("n_bigrams"),
-        collect_list(struct(col("w1"), col("w2"), col("term"))).as("terms"))
-      .select(col("doc_id"), col("n_bigrams"),
-        expr("aggregate(array_sort(terms), CAST(0.0 AS DOUBLE), " +
-          "(acc, x) -> acc + x.term)").as("logp"))
-      .select(col("doc_id"), col("n_bigrams"),
-        round(col("logp"), 4).as("sum_logp"),
-        round(col("logp") / col("n_bigrams"), 4).as("avg_logp"))
-  }
-
-  /** The BOUNDED-MEMORY twin of [[bigramLogprobCore]] (r16, verdict
-    * item 3 — guide §5): the per-doc `collect_list` + `array_sort`
-    * buffers a whole document's distinct-bigram stream in ONE
-    * aggregation buffer, and a TypedImperativeAggregate buffer cannot
-    * spill — a pathological document at corpus scale is an OOM, not a
-    * slowdown. Here the same left-to-right fold streams instead: rows
-    * sort by (doc, w1, w2) inside a window (UnsafeExternalSorter —
-    * SPILLABLE), a running-frame sum adds the terms one by one in
-    * exactly the array fold's order (running aggregation evaluates
-    * incrementally per row; 0.0-init left fold ≡ null-skipping sum here
-    * since terms are non-null), and the last row per doc carries the
-    * total. Bit-identical outputs: (w1, w2) is unique per doc, struct
-    * array_sort orders by (w1, w2) before ever reaching term, and both
-    * engines compare strings as binary UTF-8 — same order, same adds.
-    */
-  def bigramLogprobStreamCore(documents: DataFrame): DataFrame = {
-    val toks = documents
-      .select(col("doc_id"), filter(words, w => w =!= "").as("ws"))
-    val vocab = toks.select(explode(array_distinct(col("ws"))).as("w"))
-      .agg(countDistinct(col("w")).as("v"))
-    val dbc = toks
-      .filter(size(col("ws")) >= 2)
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(1, size(ws) - 1), " +
-          "i -> named_struct('w1', element_at(ws, i), 'w2', element_at(ws, i + 1)))"))
-          .as("bg"))
-      .select(col("doc_id"), col("bg.w1").as("w1"), col("bg.w2").as("w2"))
       .repartition(col("w1"))
       .groupBy(col("doc_id"), col("w1"), col("w2"))
       .agg(count(lit(1)).as("c"))

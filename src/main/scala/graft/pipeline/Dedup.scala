@@ -71,10 +71,9 @@ object Dedup {
   }
 
   private def bandBuckets(df: DataFrame, idCol: String, textCol: String,
-                          k: Int, bands: Int,
-                          signature: (Column, Int) => Column): DataFrame =
+                          k: Int, bands: Int): DataFrame =
     bandBucketsFromSig(
-      df.select(col(idCol).as("doc_id"), signature(col(textCol), k).as("sig")),
+      df.select(col(idCol).as("doc_id"), minhashSignature(col(textCol), k).as("sig")),
       k, bands)
 
   /** Fast per-component banding: ONE string hash per token, then k
@@ -102,9 +101,8 @@ object Dedup {
     * rowsPerBand * bands must equal the signature length.
     */
   def lshCandidates(df: DataFrame, idCol: String, textCol: String,
-                    k: Int = 16, bands: Int = 4,
-                    signature: (Column, Int) => Column = minhashSignature): DataFrame = {
-    val buckets = bandBuckets(df, idCol, textCol, k, bands, signature)
+                    k: Int = 16, bands: Int = 4): DataFrame = {
+    val buckets = bandBuckets(df, idCol, textCol, k, bands)
     buckets.as("a")
       .join(buckets.as("b"),
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
@@ -447,9 +445,8 @@ object Dedup {
   }
 
   def lshClusters(df: DataFrame, idCol: String, textCol: String,
-                  k: Int = 16, bands: Int = 4,
-                  signature: (Column, Int) => Column = minhashSignature): DataFrame =
-    clustersFromBuckets(bandBuckets(df, idCol, textCol, k, bands, signature))
+                  k: Int = 16, bands: Int = 4): DataFrame =
+    clustersFromBuckets(bandBuckets(df, idCol, textCol, k, bands))
 
   /** [[lshClusters]] on the single-string-hash banding
     * ([[fastBandBuckets]]): same collision guarantees as the k-hash
@@ -464,8 +461,6 @@ object Dedup {
     * all unclustered docs — linear end-to-end.
     */
   def lshSurvivors(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int = 16, bands: Int = 4,
-                   signature: (Column, Int) => Column = minhashSignature): DataFrame =
-    keepSurvivors(docs, idCol,
-      lshClusters(docs, idCol, textCol, k, bands, signature))
+                   k: Int = 16, bands: Int = 4): DataFrame =
+    keepSurvivors(docs, idCol, lshClusters(docs, idCol, textCol, k, bands))
 }

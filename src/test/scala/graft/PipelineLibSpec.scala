@@ -164,7 +164,7 @@ class PipelineLibSpec extends SparkSpec {
       s"base hash column must stay materialized, not inlined: ${plan.take(400)}")
   }
 
-  test("fast LSH banding keeps near-dup recall under single-token insertion") {
+  test("k-hash LSH banding keeps near-dup recall under single-token insertion") {
     import spark.implicits._
     // B = A plus one extra token — jaccard 20/21 ≈ 0.95. Positional
     // bottom-k banding missed such pairs deterministically whenever the
@@ -174,8 +174,7 @@ class PipelineLibSpec extends SparkSpec {
     val df = cases.flatMap { case (j, ta, tb) =>
       Seq((j * 2L, ta, j), (j * 2L + 1, tb, j))
     }.toDF("doc_id", "text", "grp")
-    val cand = Dedup.lshCandidates(df, "doc_id", "text",
-      signature = (c, k) => Dedup.minhashSignature(c, k))
+    val cand = Dedup.lshCandidates(df, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val wantPairs = (0 until 10).map(j => (j * 2L, j * 2L + 1)).toSet
     val hit = wantPairs.count(cand.contains)

@@ -180,20 +180,27 @@ class PlanAuditSpec extends SparkSpec {
     // the prefix-count window partitions by w1; the (w1, w2) count
     // window's clustering is satisfied by the same hash(w1), so the
     // wide edges are exactly: per-doc bigram agg, the w1 window, the
-    // per-doc re-agg. The vocab scalar broadcasts (1 row).
+    // per-doc fold. The vocab scalar broadcasts (1 row).
     val p = finalPlanSection(plan("text_bigram_logprob"))
     assert(!p.contains("CartesianProduct") && !p.contains("SortMergeJoin"),
       s"no pairwise or shuffled join anywhere: ${p.take(800)}")
     // 2 main-path edges (the explicit hash(w1) the count AND both
-    // windows ride — see bigramLogprobCore — then the doc re-agg) + the
+    // windows ride — see bigramLogprobCore — then the doc_id fold) + the
     // vocab subtree's distinct-word dedup; neither window may add one
     val exchanges = "Exchange hashpartitioning".r.findAllIn(p).size
     assert(exchanges <= 3,
-      s"w1 repartition + doc re-agg + vocab dedup only, got $exchanges: ${p.take(800)}")
+      s"w1 repartition + doc fold + vocab dedup only, got $exchanges: ${p.take(800)}")
     val w1w2Window = "Sort \\[w1#\\d+ ASC NULLS FIRST, w2#\\d+ ASC NULLS FIRST\\], false".r
     assert(w1w2Window.findFirstIn(p).isDefined,
       s"the (w1, w2) window must ride the w1 exchange via a local sort: ${p.take(800)}")
-    assert(p.contains("partial_"), "the doc re-agg must partial-aggregate map-side")
+    // the per-doc fold is a spillable window sort, not a collect_list
+    // buffer (an ObjectHashAggregate's typed buffer cannot spill)
+    assert(!p.contains("ObjectHashAggregate"),
+      s"no per-doc collect buffer: ${p.take(800)}")
+    val docWindow = ("Sort \\[doc_id#\\d+L? ASC NULLS FIRST, w1#\\d+ ASC NULLS FIRST, " +
+      "w2#\\d+ ASC NULLS FIRST\\], false").r
+    assert(docWindow.findFirstIn(p).isDefined,
+      s"the per-doc running sum must sort by (doc_id, w1, w2): ${p.take(800)}")
   }
 
   test("win_range_frame_scalable: the r9 fused cumulative read keeps the subtree count down") {
